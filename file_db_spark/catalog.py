@@ -48,9 +48,9 @@ def default_sf_dir() -> str:
 
 
 #: confs every caller's session needs, regardless of who built it.
-#: Both are runtime-settable (verified), so setting them here makes the
-#: engine work under ANY SparkSession — including a grading/driver
-#: session that never went through session.get_spark().
+#: All are runtime-settable, so setting them here makes the engine work
+#: under ANY SparkSession — including a grading/driver session that
+#: never went through session.get_spark(), which applies this same dict.
 _REQUIRED_CONFS = {
     # events.parquet stores INT64 TIMESTAMP(NANOS); Spark 4 rejects it
     # by default (PARQUET_TYPE_ILLEGAL). Read nanos as long; load_table
@@ -59,11 +59,18 @@ _REQUIRED_CONFS = {
     # Timestamp semantics must match the DuckDB oracle's naive
     # timestamps regardless of the caller session's timezone.
     "spark.sql.session.timeZone": "UTC",
-    # See session.py: InferFiltersFromGenerate re-expands exploded-array
-    # expressions below the staging projections (~3x recompute of the
-    # tokenize->shingle pipeline). Safe to exclude: every exploded array
-    # in this engine has a non-empty fallback element.
+    # InferFiltersFromGenerate infers `size(arr)>0 AND isnotnull(arr)`
+    # for every explode, and pushdown re-expands it BELOW the staging
+    # projections: the tokenize->shingle pipeline ran ~3x per row
+    # (28.9s -> 1.3s on the contamination probe at sf0.1). Every
+    # exploded array here has a non-empty fallback element, so the
+    # inferred filter never prunes a row; exclude the rule.
     "spark.sql.optimizer.excludedRules": "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    # By default cached plans are exempt from AQE coalescing, so every
+    # persisted frame ran at the full shuffle width whatever its size
+    # (x19 on 154 vertices: 759 tasks; 44 with this set). Read when a
+    # frame is persisted, so a runtime set covers every later cache.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 

@@ -26,6 +26,8 @@ hashing.py computes true MD5+SHA1 per FileHandler/HashFile.py:6-51).
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import Column, DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F
 
@@ -46,12 +48,14 @@ __all__ = [
 # join stages for identical 20-row/500-row results. This is the
 # single-process analog of materializing the catalog tables once (the
 # real engine's store.py does exactly that with parquet generations).
-_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+# Weakly keyed on the session itself, so a new session that reuses a
+# dead one's id() can never read that session's checkpoints.
+_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
 def _cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    key = (id(spark), sf_dir, name)
-    df = _CACHE.get(key)
+    key = (sf_dir, name)
+    df = _CACHE.get(spark, {}).get(key)
     if df is None:
         # Eager localCheckpoint, not persist: the fixture tables feed
         # DOZENS of registry queries per session (consumer depth >> 2,
@@ -64,7 +68,7 @@ def _cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
         # at cluster scale this is "materialize the catalog tables
         # once" (store.py does it with parquet generations).
         df = build().localCheckpoint(eager=True)
-        _CACHE[key] = df
+        _CACHE.setdefault(spark, {})[key] = df
     return df
 
 

@@ -3137,11 +3137,8 @@ class TableStore:
             # graph — target read (manifest + DV anti-joins) ⋈ source
             # (often a CDC diff's own full-outer join). A persist leaves
             # that tree in every downstream plan (re-analyzed and
-            # AQE-re-walked per action) and pins the cache at session
-            # shuffle width (cached plans are exempt from AQE
-            # coalescing); the checkpoint truncates the plan to an RDD
-            # leaf at AQE-coalesced width — O(changes) bytes wide, not
-            # 32 fixed tasks per downstream job.
+            # AQE-re-walked per action); the checkpoint truncates the
+            # plan to an RDD leaf.
             # merge metrics ride the checkpoint materialization as
             # observed metrics — the per-op counts arrive with the one
             # action that computes the classified set, instead of a

@@ -21,6 +21,7 @@ oversized embedding cells are sign-bit sub-bucketed — see
 from __future__ import annotations
 
 import os
+import threading
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,15 +44,6 @@ from ..functions.text import (
 )
 from ..functions.vectors import cosine
 
-#: shuffle width for small-state fixpoint loops / reductions (label
-#: propagation, provenance flag rollups): their shuffled state is
-#: O(candidate pairs among near-dup representatives), thousands of rows
-#: even when the corpus is not. Env-tunable for deployments whose pair
-#: graphs are genuinely wide.
-_SMALL_STATE_SHUFFLE = int(
-    os.environ.get("SPARK_GRAFT_SMALLSTATE_SHUFFLE", "8")
-)
-
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
 
@@ -64,6 +56,11 @@ ORACLES: dict[str, str] = {}
 _SPREAD_STATE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
+
+#: Guards _SPREAD_STATE and _CACHE: suite members and the x27/x36
+#: generator fan-out reach them from pool threads, and a
+#: WeakKeyDictionary's setdefault is not atomic.
+_STATE_LOCK = threading.Lock()
 
 #: Corpus size above which a narrow scan is ALWAYS spread before the
 #: text kernels, even with JIT-warm code: past this, per-row kernel
@@ -118,10 +115,12 @@ def _spread_corpus(d: DataFrame, family: str = "x3") -> DataFrame:
     COMPUTE, it never re-shuffles big scans."""
     spark = d.sparkSession
     dp = spark.sparkContext.defaultParallelism
-    state = _SPREAD_STATE.setdefault(spark, {"seen": set(), "width": {}})
-    first = family not in state["seen"]
-    state["seen"].add(family)
     files = tuple(sorted(d.inputFiles()))
+    with _STATE_LOCK:
+        state = _SPREAD_STATE.setdefault(spark, {"seen": set(), "width": {}})
+        first = family not in state["seen"]
+        state["seen"].add(family)
+        width = state["width"].get(files) if files else None
     if not first and files:
         b = _corpus_bytes(list(files))
         if b is not None and b < _SPREAD_MIN_BYTES:
@@ -130,11 +129,11 @@ def _spread_corpus(d: DataFrame, family: str = "x3") -> DataFrame:
     # real driver time per call and the answer is a property of the
     # scanned files — cache it per file set (skipped for file-less
     # frames, which would otherwise all share one stale entry)
-    width = state["width"].get(files) if files else None
     if width is None:
         width = d.rdd.getNumPartitions()
         if files:
-            state["width"][files] = width
+            with _STATE_LOCK:
+                state["width"][files] = width
     if width >= dp:
         return d
     return d.repartition(dp)
@@ -144,24 +143,41 @@ def _spread_corpus(d: DataFrame, family: str = "x3") -> DataFrame:
 # (session, sf_dir) and feed several registry entries in one grading
 # run (x3, x7, x10, x710 suite) — re-deriving them repeats the whole
 # shingle pipeline / convergence loop for identical small results. On
-# a cluster these are materialized intermediate tables.
-_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+# a cluster these are materialized intermediate tables. Weakly keyed
+# on the session itself, never on a reusable id(); per session,
+# (sf_dir, name) -> frame, plus (sf_dir, "held") -> the `_held` list.
+_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
 def _cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    key = (id(spark), sf_dir, name)
-    df = _CACHE.get(key)
+    with _STATE_LOCK:
+        df = _CACHE.get(spark, {}).get((sf_dir, name))
     if df is None:
         df = build()
-        _CACHE[key] = df
+        with _STATE_LOCK:
+            _CACHE.setdefault(spark, {})[(sf_dir, name)] = df
     return df
 
 
+def _held(spark: SparkSession, sf_dir: str) -> list:
+    """Frames persisted inside lazily returned results: the result
+    still reads them when it executes, so its builder cannot release
+    them; clear_cache(sf_dir) unpersists them."""
+    with _STATE_LOCK:
+        return _CACHE.setdefault(spark, {}).setdefault((sf_dir, "held"), [])
+
+
 def clear_cache(sf_dir: str | None = None) -> None:
-    """Drop cached derived tables (bench uses this between timed runs so
-    x3/x7 timings measure the real pipeline, not a cache read)."""
-    for key in [k for k in _CACHE if sf_dir is None or k[1] == sf_dir]:
-        df = _CACHE.pop(key)
+    """Drop cached derived tables and held intermediates (bench uses
+    this between timed runs so x3/x7 timings measure the real pipeline,
+    not a cache read)."""
+    with _STATE_LOCK:
+        dropped = [
+            entries.pop(key)
+            for entries in list(_CACHE.values())
+            for key in [k for k in entries if sf_dir is None or k[0] == sf_dir]
+        ]
+    for df in (d for v in dropped for d in (v if isinstance(v, list) else [v])):
         try:
             df.unpersist()
         except Exception:
@@ -299,7 +315,8 @@ def x3_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_x3_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _x3_pairs_from(_spread_corpus(load_table(spark, sf_dir, "documents"), "x3"))
+    documents = _spread_corpus(load_table(spark, sf_dir, "documents"), "x3")
+    return _x3_pairs_from(documents, _held(spark, sf_dir))
 
 
 def _x3_pairs_from(d: DataFrame, scratch: list | None = None) -> DataFrame:
@@ -440,7 +457,8 @@ def x4_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     computation is embarrassingly parallel Column work — one md5 per
     shingle plus 32 integer permutations, all inside codegen.
     """
-    return _x4_pairs_from(_spread_corpus(load_table(spark, sf_dir, "documents"), "x4"))
+    documents = _spread_corpus(load_table(spark, sf_dir, "documents"), "x4")
+    return _x4_pairs_from(documents, _held(spark, sf_dir))
 
 
 def _x4_pairs_from(d: DataFrame, scratch: list | None = None) -> DataFrame:
@@ -795,7 +813,7 @@ def x7_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _propagate_min_labels(
-    edges: DataFrame, what: str, max_rounds: int = 20, width: int | None = None
+    edges: DataFrame, what: str, max_rounds: int = 20
 ) -> DataFrame:
     """Min-label propagation to a fixpoint over a symmetric edge table
     (columns a, b; both directions present). Returns (v, lab).
@@ -807,16 +825,11 @@ def _propagate_min_labels(
     saving one full round. Convergence detector is the 1-row label-sum
     scalar (monotone non-increasing -> fixpoint).
 
-    ``width`` pins the loop's shuffles to an explicit partition count
-    ON THE FRAMES (repartition by the key each exchange needs), for
-    fixpoints whose state is small even when the corpus is not —
-    VERDICT r10 #8: the previous session-conf scoping
-    (scoped_shuffle) silently narrowed any UNRELATED query running
-    concurrently in the session. The loop's state is O(candidate-pair
-    endpoints); callers pass _SMALL_STATE_SHUFFLE (env-tunable) when
-    that holds."""
-    if width:
-        edges = edges.repartition(width, "a")
+    No partition count is chosen here: the loop's state is
+    O(candidate-pair endpoints), often thousands of rows when the
+    corpus is not, and AQE coalesces every round's shuffle — the
+    persisted edge table included — to the width its bytes need. The
+    edge table is released once the labels are checkpointed."""
     edges = edges.persist()
     labels = (
         edges.select(F.col("a").alias("v"), F.least("a", "b").alias("cand"))
@@ -826,16 +839,11 @@ def _propagate_min_labels(
     )
     prev_sum = labels.agg(F.sum("lab")).collect()[0][0]
     for _ in range(max_rounds):  # bound >> diameter of near-dup clusters
-        # no explicit repartition on the labels side: EnsureRequirements
-        # co-partitions it to the edges' persisted hash(a, width) layout
         prop = labels.join(edges, labels.v == edges.a).select(
             F.col("b").alias("v"), "lab"
         )
-        u = labels.unionByName(prop)
-        if width:
-            u = u.repartition(width, "v")
         new_labels = (
-            u.groupBy("v").agg(F.min("lab").alias("lab"))
+            labels.unionByName(prop).groupBy("v").agg(F.min("lab").alias("lab"))
         ).localCheckpoint()
         new_sum = new_labels.agg(F.sum("lab")).collect()[0][0]
         labels = new_labels
@@ -848,6 +856,7 @@ def _propagate_min_labels(
         # single digits; hitting the bound means the input isn't one —
         # fail loudly (at 100 TB: switch to star-contraction rounds).
         raise RuntimeError(f"{what}: label propagation did not converge in {max_rounds} rounds")
+    edges.unpersist()
     return labels
 
 
@@ -1798,9 +1807,11 @@ def x19_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex key, so the exchange is reused round to round) + ONE
     map-side-combined SUM shuffle on dst. Degrees are computed once and
     carried; the 1-row vertex-count normalizer is a broadcast (the d19
-    pattern). Rounds are a fixed unrolled depth with per-round persist
-    (v7/d30 pattern) — bounded lineage, no driver-side decisions. The
-    edge list is the cached x3 pair artifact shared with x7/x16/x17."""
+    pattern). Rounds are a fixed unrolled depth of lazy frames: each
+    round's ranks have exactly one consumer (the next round), so the
+    whole PR_ROUNDS-deep plan runs as ONE job with no per-round
+    materialization and no driver-side decisions. The edge list is the
+    cached x3 pair artifact shared with x7/x16/x17."""
     pairs = x3_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     e = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -1811,20 +1822,18 @@ def x19_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = e.groupBy("src").agg(F.count("*").cast("bigint").alias("d"))
     # carry the source degree on each edge once: the per-round join then
     # brings only the 2-column rank table to the 3-column edge list.
-    # The edge list stays an eager localCheckpoint (every round plans
-    # over it — consumer depth >= 2, the b645979 rule), but the
-    # per-round ranks are lazy persists: each rank has exactly ONE
-    # consumer (the next round), and at PR_ROUNDS=3 the re-planning an
-    # eager checkpoint saves is smaller than the extra materialization
-    # job it costs (VERDICT r10 #3 — x19 was net slower checkpointed:
-    # 2.32 -> 3.14 s).
-    ed = e.join(deg, "src").select("src", "dst", "d").localCheckpoint()
+    # The edge list is the one persisted intermediate (every round reads
+    # it — consumer depth >= 2, the b645979 rule): a lazy persist fills
+    # during the result's own job, not an extra eager one, and
+    # clear_cache releases it. Each rank has one consumer, the next
+    # round, so ranks stay lazy: materializing one saves no recompute.
+    ed = e.join(deg, "src").select("src", "dst", "d").persist()
+    _held(spark, sf_dir).append(ed)
     nn = deg.select(F.count("*").cast("bigint").alias("n"))
     rank = (
         deg.select(F.col("src").alias("v"))
         .crossJoin(F.broadcast(nn))
         .select("v", F.expr(f"{PR_SCALE} div n").cast("bigint").alias("rank"))
-        .persist()
     )
     for _ in range(PR_ROUNDS):
         contrib = (
@@ -1844,7 +1853,6 @@ def x19_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("rank"),
             )
-            .persist()
         )
     return (
         rank.join(deg, rank.v == deg.src)
@@ -2885,23 +2893,16 @@ def x27_fused_dedup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k in gens:
         part = parts[k]
         tagged = part if tagged is None else tagged.unionByName(part)
-    pairs = (
-        tagged.select("doc_a", "doc_b")
-        .repartition(_SMALL_STATE_SHUFFLE, "doc_a", "doc_b")
-        .distinct()
-    )
+    pairs = tagged.select("doc_a", "doc_b").distinct()
     edges = pairs.select(
         F.col("doc_a").alias("src_v"), F.col("doc_b").alias("dst_v")
     ).unionByName(
         pairs.select(F.col("doc_b").alias("src_v"), F.col("doc_a").alias("dst_v"))
     ).select(F.col("src_v").alias("a"), F.col("dst_v").alias("b"))
     # the fixpoint's shuffled state is O(pair endpoints) — thousands of
-    # rows — so its per-round shuffles run narrow, pinned on the frames
-    # themselves (explicit width, not session conf — VERDICT r10 #8);
-    # the corpus-scale generator work already happened above
-    labels = _propagate_min_labels(
-        edges, "x27", width=_SMALL_STATE_SHUFFLE
-    ).select(
+    # rows — and AQE coalesces its per-round shuffles to match; the
+    # corpus-scale generator work already happened above
+    labels = _propagate_min_labels(edges, "x27").select(
         F.col("v").alias("doc_id"),
         F.col("lab").cast("bigint").alias("component_id"),
     )
@@ -3761,26 +3762,18 @@ def x36_collapsed_provenance_graph(
         tagged = parts[k] if tagged is None else tagged.unionByName(parts[k])
     # Downstream of the generators everything — pair graph, label
     # propagation fixpoint, provenance flags — is O(representative
-    # pairs) state, thousands of rows here; the loop's serial rounds
-    # were paying 32 task launches per shuffle for ~0 CPU each
-    # (measured: 109-128-task union stages at < 1 ms CPU/task). The
-    # narrow widths are pinned on the frames themselves (explicit
-    # repartition by the key each exchange needs — VERDICT r10 #8: the
-    # previous session-conf scoping silently narrowed any unrelated
-    # concurrent query).
-    pairs = (
-        tagged.select("doc_a", "doc_b")
-        .repartition(_SMALL_STATE_SHUFFLE, "doc_a", "doc_b")
-        .distinct()
-    )
+    # pairs) state, thousands of rows here; at the fixed session width
+    # the loop's serial rounds paid 32 task launches per shuffle for
+    # ~0 CPU each (measured: 109-128-task union stages at < 1 ms
+    # CPU/task). No width is chosen here: AQE coalesces each shuffle,
+    # persisted ones included, to the size of its data.
+    pairs = tagged.select("doc_a", "doc_b").distinct()
     edges = pairs.select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     ).unionByName(
         pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
     )
-    labels = _propagate_min_labels(
-        edges, "x36", width=_SMALL_STATE_SHUFFLE
-    ).select(
+    labels = _propagate_min_labels(edges, "x36").select(
         F.col("v").alias("rep_id"),
         F.col("lab").cast("bigint").alias("component_id"),
     )
@@ -3788,7 +3781,6 @@ def x36_collapsed_provenance_graph(
         tagged.select(
             F.explode(F.array("doc_a", "doc_b")).alias("rep_id"), "src"
         )
-        .repartition(_SMALL_STATE_SHUFFLE, "rep_id", "src")
         .distinct()
         .groupBy("rep_id")
         .agg(

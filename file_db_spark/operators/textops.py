@@ -5,6 +5,8 @@ Column expressions (JVM-side) — the 100 TB path has zero Python in it.
 
 from __future__ import annotations
 
+import weakref
+
 from ..localframe import local_df
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -1969,26 +1971,27 @@ def _bpe_syms_of(df: DataFrame) -> DataFrame:
 #: trained-chain cache, same rationale as dedup._CACHE: d30 and d32
 #: consume the same trained word table in one grading run; on a cluster
 #: it is a persisted tokenizer artifact written once per training run.
-_BPE_CACHE: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = {}
+#: Weakly keyed on the session itself; per session, sf_dir -> tables.
+_BPE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
 def clear_cache(sf_dir: str | None = None) -> None:
     """Drop cached trained-BPE tables (bench symmetry with
     dedup.clear_cache — timed runs measure the real training)."""
-    for key in [k for k in _BPE_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _, cur = _BPE_CACHE.pop(key)
-        try:
-            cur.unpersist()
-        except Exception:
-            pass
+    for entries in list(_BPE_CACHE.values()):
+        for key in [k for k in entries if sf_dir is None or k == sf_dir]:
+            _, cur = entries.pop(key)
+            try:
+                cur.unpersist()
+            except Exception:
+                pass
 
 
 def _bpe_trained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Run the BPE_TRAIN_ROUNDS merge loop once; return (merge-list df,
     final word table (word, freq, seq)) — the Spark twin of the shared
     oracle chain `_bpe_chain_ctes` (word carried through every round)."""
-    key = (id(spark), sf_dir)
-    hit = _BPE_CACHE.get(key)
+    hit = _BPE_CACHE.get(spark, {}).get(sf_dir)
     if hit is not None:
         return hit
     d = load_table(spark, sf_dir, "documents")
@@ -2051,7 +2054,7 @@ def _bpe_trained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
             .persist()
         )
     out = (merges, cur)
-    _BPE_CACHE[key] = out
+    _BPE_CACHE.setdefault(spark, {})[sf_dir] = out
     return out
 
 

@@ -4,8 +4,11 @@ Design notes (100 TB stance):
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
   and dynamic broadcast-join demotion/promotion replace hand-tuned
   partition counts when the data is 1000x bigger than the test SF.
-- Session timezone pinned UTC so timestamp semantics are deterministic
-  and match the DuckDB oracle (naive timestamps).
+  Persisted frames coalesce too, so no operator picks a width for
+  small state.
+- ``catalog._REQUIRED_CONFS`` (UTC, nanos parquet, excluded rules,
+  cached-plan coalescing) is applied here and, by
+  ``catalog.ensure_confs``, to a session built elsewhere.
 - Arrow enabled for all pandas interchange (Pandas UDFs, toPandas).
 - ``spark.sql.shuffle.partitions`` defaults to 32 locally; on a real
   cluster AQE coalesces from a deliberately high initial number, so we
@@ -17,6 +20,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from .catalog import _REQUIRED_CONFS
 
 __all__ = ["get_spark", "stop_spark"]
 
@@ -40,30 +45,11 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # --- determinism / oracle parity ---
-        .config("spark.sql.session.timeZone", "UTC")
-        # Testdata events.parquet stores INT64 TIMESTAMP(NANOS), which
-        # Spark 4 rejects by default (PARQUET_TYPE_ILLEGAL). Read nanos
-        # as long; catalog.load_table converts to timestamp exactly.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # --- adaptive execution: the scale story ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # InferFiltersFromGenerate copies the exploded-array expression
-        # into an inferred `size(arr)>0 AND isnotnull(arr)` filter that
-        # predicate-pushdown then re-expands BELOW the projections that
-        # staged the array — the whole tokenize->shingle pipeline runs
-        # ~3x per row (measured 28.9s -> 1.3s on the contamination
-        # probe at sf0.1). Every explode in this engine is over a
-        # provably non-empty array (shingle/band builders emit a
-        # fallback element), so the inferred filter can never prune a
-        # row and is pure re-computation; exclude the rule.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
         # Spark 4.1 writes + verifies a checksum sidecar for every
         # checkpoint file (state-store deltas included) through a
         # future pool the task must await; thread dumps during the s8
@@ -108,7 +94,9 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    # determinism / oracle parity / cached-plan coalescing: the same
+    # confs catalog.ensure_confs applies to a session built elsewhere
+    for k, v in {**_REQUIRED_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
