@@ -56,7 +56,7 @@ __all__ = [
 ]
 
 #: planner flag that auto-disables bucketed scans for non-join queries;
-#: turned off briefly (try/finally) to demonstrate bucket pruning.
+#: selected_buckets turns it off in a private session to show pruning.
 _AUTO_SCAN = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
 
 
@@ -117,15 +117,20 @@ def exchange_count(df: DataFrame) -> int:
 
 def selected_buckets(df: DataFrame) -> tuple[int, int]:
     """(selected, total) bucket counts for `df`'s scan, planned with
-    bucketed scans forced on so pruning is visible. Restores the
-    session flag afterwards."""
+    bucketed scans forced on so pruning is visible. The analyzed plan is
+    re-planned in a new session (its own SQLConf, the same catalog), so
+    the caller's session conf never changes under concurrent queries."""
     spark = df.sparkSession
-    prev = spark.conf.get(_AUTO_SCAN)
-    try:
-        spark.conf.set(_AUTO_SCAN, "false")
-        plan = physical_plan(df)
-    finally:
-        spark.conf.set(_AUTO_SCAN, prev)
+    private = spark._jsparkSession.newSession()
+    private.conf().set(_AUTO_SCAN, "false")
+    plan = (
+        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            private, df._jdf.queryExecution().analyzed()
+        )
+        .queryExecution()
+        .executedPlan()
+        .toString()
+    )
     m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
     if not m:
         return (-1, -1)

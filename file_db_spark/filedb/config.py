@@ -19,6 +19,8 @@ import json
 import os
 from typing import Any
 
+from .store import publish_bytes
+
 __all__ = ["DEFAULT_CONFIG_FILE", "DEFAULTS", "load_config", "write_config", "effective_config"]
 
 DEFAULT_CONFIG_FILE = "config.json"
@@ -75,11 +77,12 @@ def load_config(file_name: str | None = None, create_file: bool = False) -> dict
 
 
 def write_config(values: dict, file_name: str | None = None) -> None:
-    """Persist the config as indented JSON. Unlike loading, an explicit
-    target path is honored even if the file doesn't exist yet."""
+    """Persist the config as indented JSON, atomically: a crash or an
+    unserializable value leaves the previous file intact (a truncated
+    file would load as ``{}``). Unlike loading, an explicit target path
+    is honored even if the file doesn't exist yet."""
     path = file_name if file_name is not None else DEFAULT_CONFIG_FILE
-    with open(path, "w") as fh:
-        json.dump(values, fh, indent=4)
+    publish_bytes(path, json.dumps(values, indent=4))
 
 
 def effective_config(file_name: str | None = None) -> dict:

@@ -42,6 +42,8 @@ import shutil
 
 from pyspark.sql import DataFrame, functions as F
 
+from .store import publish_bytes, sync_tree
+
 __all__ = ["export_shards", "read_export", "export_manifest"]
 
 
@@ -136,10 +138,9 @@ def export_shards(
         "n_shards": n_shards,
         "shards": {str(k): counts[k] for k in sorted(counts)},
     }
-    tmp = _manifest_path(root) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, _manifest_path(root))
+    # the manifest may only name data whose bytes are durable
+    sync_tree(staging)
+    publish_bytes(_manifest_path(root), json.dumps(manifest))
     if published is not None and published["data_dir"] != data_dir:
         shutil.rmtree(
             os.path.join(root, published["data_dir"]), ignore_errors=True

@@ -121,6 +121,60 @@ def _commit_lock(root: str, name: str) -> _TableLock:
         return _COMMIT_LOCKS[key]
 
 
+# -- durable publish ----------------------------------------------------------
+# Every file or directory the package makes visible by a rename goes
+# through publish(). A rename alone is atomic but not durable: after a
+# power loss the new name can point at unwritten blocks, or be lost.
+
+
+def _fsync(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def sync_tree(path: str) -> None:
+    """fsync a file, or every file under a directory and then the
+    directory itself (so the entries naming those files are durable)."""
+    if os.path.isdir(path):
+        with os.scandir(path) as it:
+            for entry in it:
+                if entry.is_dir(follow_symlinks=False):
+                    sync_tree(entry.path)
+                elif entry.is_file(follow_symlinks=False):
+                    _fsync(entry.path)
+    _fsync(path)
+
+
+def publish(src: str, dst: str) -> None:
+    """Atomically and durably make `src` (a file or a directory) visible
+    as `dst`: fsync `src`, `os.replace` it over `dst`, fsync `dst`'s
+    parent. A crash leaves either the old `dst` or the complete new one.
+    A directory `dst` must not exist yet or be empty."""
+    sync_tree(src)
+    os.replace(src, dst)
+    _fsync(os.path.dirname(os.path.abspath(dst)))
+
+
+def publish_bytes(dst: str, data: str | bytes, publish=publish) -> None:
+    """Write `data` to `dst + ".tmp"` and `publish` it over `dst`."""
+    tmp = dst + ".tmp"
+    with open(tmp, "wb") as fh:
+        fh.write(data.encode() if isinstance(data, str) else data)
+    publish(tmp, dst)
+
+
+def _read_json(path: str):
+    """A published JSON file's content; None if it was never published."""
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except (FileNotFoundError, json.JSONDecodeError):
+        return None
+
+
 def _seg_id(entry: dict) -> str:
     """Stable identity of a manifest segment entry (its basename —
     what DV `over` lists and data-skipping prune sets key on)."""
@@ -335,6 +389,13 @@ class TableStore:
         os.makedirs(root, exist_ok=True)
         self._load_disk_schemas()
 
+    #: every rename this store makes goes through this attribute; a test
+    #: crashes any file-system step by wrapping it on its own instance
+    _publish = staticmethod(publish)
+
+    def _publish_bytes(self, dst: str, data: str | bytes) -> None:
+        publish_bytes(dst, data, self._publish)
+
     # -- root catalog pointer -------------------------------------------------
     # ONE root-level file maps every table -> its current generation and
     # is swapped by a single atomic rename. This is the store's
@@ -351,11 +412,7 @@ class TableStore:
     def _read_catalog(self) -> dict:
         """{"version": int, "tables": {name: gen_basename}} — empty at
         version 0 for a root that predates its first commit."""
-        try:
-            with open(self._catalog_path()) as fh:
-                return json.load(fh)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return {"version": 0, "tables": {}}
+        return _read_json(self._catalog_path()) or {"version": 0, "tables": {}}
 
     def catalog_version(self) -> int:
         return self._read_catalog()["version"]
@@ -380,14 +437,12 @@ class TableStore:
             for name, gen in updates.items():
                 old = cat["tables"].get(name)
                 if old is None or _ns(gen) > _ns(old):
+                    self._sync_generation(name, gen, old)
                     cat["tables"][name] = gen
                     changed = True
             if changed:
                 cat["version"] += 1
-                tmp = self._catalog_path() + ".tmp"
-                with open(tmp, "w") as fh:
-                    json.dump(cat, fh)
-                os.replace(tmp, self._catalog_path())
+                self._publish_bytes(self._catalog_path(), json.dumps(cat))
                 # append the applied swaps to the pointer LOG — the
                 # record time travel resolves through (a generation
                 # that was never pointed, e.g. a crashed commit's
@@ -406,7 +461,39 @@ class TableStore:
                         )
                         + "\n"
                     )
+                    fh.flush()
+                    os.fsync(fh.fileno())
             return cat["version"]
+
+    def _sync_generation(self, name: str, gen: str, old: str | None) -> None:
+        """Before the catalog pointer names `gen`, fsync every file it
+        can read that `old` (the generation it replaces) could not, then
+        the gen dir, the segment / DV dirs its manifest adds and the
+        table dir. Spark writes data dirs in place, not through
+        publish(); by inode, hardlinked base files are not synced again."""
+
+        def readable(g: str | None) -> set[str]:
+            if g is None:
+                return set()
+            gen_dir = os.path.join(self._dir(name), g)
+            return {gen_dir, *(self._manifest(gen_dir) or [])}
+
+        def files(dirs: set[str]) -> dict[int, str]:
+            return {
+                e.inode(): e.path
+                for p in dirs
+                if os.path.isdir(p)
+                for e in os.scandir(p)
+                if e.is_file(follow_symlinks=False)
+            }
+
+        old_dirs, new_dirs = readable(old), readable(gen)
+        synced = files(old_dirs)
+        for ino, path in files(new_dirs).items():
+            if ino not in synced:
+                _fsync(path)
+        for p in sorted(new_dirs - old_dirs) + [self._dir(name)]:
+            _fsync(p)
 
     def _catalog_log_path(self) -> str:
         return os.path.join(self.root, "_CATALOG_LOG.jsonl")
@@ -443,10 +530,10 @@ class TableStore:
         segment references."""
         d = self._dir(name)
         os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, "_SCHEMA.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(self.schemas[name].jsonValue(), fh)
-        os.replace(tmp, os.path.join(d, "_SCHEMA.json"))
+        self._publish_bytes(
+            os.path.join(d, "_SCHEMA.json"),
+            json.dumps(self.schemas[name].jsonValue()),
+        )
 
     def _load_disk_schemas(self) -> None:
         """Adopt tables persisted by a previous instance over this
@@ -523,10 +610,9 @@ class TableStore:
             return BUCKET_SPECS[name][0]
 
     def _stamp_nbuckets(self, gen_dir: str, n: int) -> None:
-        tmp = os.path.join(gen_dir, self._NBUCKETS_FILE + ".tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(int(n)))
-        os.replace(tmp, os.path.join(gen_dir, self._NBUCKETS_FILE))
+        self._publish_bytes(
+            os.path.join(gen_dir, self._NBUCKETS_FILE), str(int(n))
+        )
 
     # -- per-data-file skipping stats (bucketed generations) -------------------
     # A bucketed generation's data files carry a `_FILESTATS.json`
@@ -573,10 +659,7 @@ class TableStore:
             return None
 
     def _write_filestats(self, gen_dir: str, stats: dict) -> None:
-        tmp = self._filestats_path(gen_dir) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(stats, fh)
-        os.replace(tmp, self._filestats_path(gen_dir))
+        self._publish_bytes(self._filestats_path(gen_dir), json.dumps(stats))
 
     def _per_file_stats(
         self, name: str, data_dir: str, cols: list[str]
@@ -842,11 +925,7 @@ class TableStore:
         generation. Lives INSIDE the generation dir (underscore file,
         invisible to parquet scans) so time travel reads each
         generation with exactly its own deletion state."""
-        try:
-            with open(self._bucket_meta_path(gen_dir)) as fh:
-                return json.load(fh)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return None
+        return _read_json(self._bucket_meta_path(gen_dir))
 
     def _bucket_phys_schema(self, name: str) -> T.StructType:
         return T.StructType(
@@ -1072,12 +1151,9 @@ class TableStore:
                 .select(*[F.col(f"__k_{k}").alias(k) for k in on])
                 .distinct()
             )
-            n_dv = metrics["updated"] + metrics["deleted"]
-            if not (
-                self._arrow_small(n_dv)
-                and self._arrow_write_dir(dv_df, os.path.join(d, dv))
-            ):
-                dv_df.write.mode("overwrite").parquet(os.path.join(d, dv))
+            self._write_dir(
+                dv_df, os.path.join(d, dv), metrics["updated"] + metrics["deleted"]
+            )
             dvs.append({"path": dv, "ns": ns, "keys": list(on)})
         # per-file skipping stats: hardlinked base files inherit the
         # prior sidecar's entries (same bytes); the delta stage pays
@@ -1092,10 +1168,10 @@ class TableStore:
             shutil.rmtree(stage, ignore_errors=True)
         if fcols:
             self._write_filestats(gen, fstats)
-        tmp = self._bucket_meta_path(gen) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"waves": int(prior["waves"]) + 1, "dvs": dvs}, fh)
-        os.replace(tmp, self._bucket_meta_path(gen))
+        self._publish_bytes(
+            self._bucket_meta_path(gen),
+            json.dumps({"waves": int(prior["waves"]) + 1, "dvs": dvs}),
+        )
         self._register_bucketed_gen(name, gen)
         self._catalog_swap({name: os.path.basename(gen)})
 
@@ -1124,10 +1200,7 @@ class TableStore:
         os.makedirs(d, exist_ok=True)
         gen = os.path.join(d, f"gen-{time.time_ns()}")
         os.makedirs(gen, exist_ok=True)
-        tmp = os.path.join(gen, "_MANIFEST.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-        os.replace(tmp, os.path.join(gen, "_MANIFEST"))
+        self._publish_bytes(os.path.join(gen, "_MANIFEST"), json.dumps(doc))
         self._catalog_swap({name: os.path.basename(gen)})
 
     #: rows at or below which a segment/DV write may go through the
@@ -1139,47 +1212,40 @@ class TableStore:
     #: commit O(changes) with a far smaller constant. The threshold is
     #: a row-count the caller must KNOW (merge/apply_changes metrics) —
     #: unhinted writes always take the Spark path, so an O(table)
-    #: rewrite can never land on the driver. Tune with
-    #: $SPARK_GRAFT_ARROW_WRITE_ROWS (0 disables).
-    _ARROW_WRITE_MAX_ROWS = int(
-        os.environ.get("SPARK_GRAFT_ARROW_WRITE_ROWS", "65536")
-    )
+    #: rewrite can never land on the driver.
+    _ARROW_WRITE_MAX_ROWS = 65536
 
-    def _arrow_write_dir(self, df: DataFrame, path: str) -> bool:
-        """Driver-side single-file parquet write of a SMALL DataFrame
-        (one collect as an Arrow table, no Spark write job). Writes to
-        a temp dir and renames, so a failure leaves no trace; returns
-        False on any conversion surprise and the caller falls back to
-        the Spark writer — behavior can never diverge, only speed.
-        Readers are unaffected: every segment/DV read passes an
-        explicit schema, and Arrow writes the same physical parquet
-        types Spark does (int32/int64, decimal128, timestamp-micros
-        UTC)."""
-        try:
-            import pyarrow.parquet as pq
+    def _write_dir(
+        self, df: DataFrame, path: str, rows_hint: int | None
+    ) -> None:
+        """Write `df` as the data directory `path`. When `rows_hint`
+        (an upper bound on the row count) is at most
+        _ARROW_WRITE_MAX_ROWS, skip the Spark job: one collect as an
+        Arrow table, one parquet file written driver-side into a temp
+        dir and published, so a failure leaves no trace. Any conversion
+        surprise falls back to the Spark writer — behavior can never
+        diverge, only speed. Readers are unaffected: every segment/DV
+        read passes an explicit schema, and Arrow writes the same
+        physical parquet types Spark does (int32/int64, decimal128,
+        timestamp-micros UTC)."""
+        if rows_hint is not None and 0 <= rows_hint <= self._ARROW_WRITE_MAX_ROWS:
+            tmp = path + ".arrowtmp"
+            try:
+                import pyarrow.parquet as pq
 
-            tbl = df.toArrow()
-        except Exception as exc:
-            _LOG.warning("arrow small-write fell back to Spark for %s: %r", path, exc)
-            return False
-        tmp = path + ".arrowtmp"
-        try:
-            os.makedirs(tmp, exist_ok=True)
-            pq.write_table(tbl, os.path.join(tmp, "part-00000.parquet"))
-            with open(os.path.join(tmp, "_SUCCESS"), "w"):
-                pass
-            os.rename(tmp, path)
-            return True
-        except Exception as exc:
-            _LOG.warning("arrow small-write fell back to Spark for %s: %r", path, exc)
-            shutil.rmtree(tmp, ignore_errors=True)
-            return False
-
-    def _arrow_small(self, rows_hint: int | None) -> bool:
-        return (
-            rows_hint is not None
-            and 0 <= rows_hint <= self._ARROW_WRITE_MAX_ROWS
-        )
+                tbl = df.toArrow()
+                os.makedirs(tmp, exist_ok=True)
+                pq.write_table(tbl, os.path.join(tmp, "part-00000.parquet"))
+                with open(os.path.join(tmp, "_SUCCESS"), "w"):
+                    pass
+                self._publish(tmp, path)
+                return
+            except Exception as exc:
+                _LOG.warning(
+                    "arrow small-write fell back to Spark for %s: %r", path, exc
+                )
+                shutil.rmtree(tmp, ignore_errors=True)
+        df.write.mode("overwrite").parquet(path)
 
     def _write_segment(
         self,
@@ -1200,8 +1266,7 @@ class TableStore:
             out = out.sortWithinPartitions(*SORT_KEYS[name])
         seg = f"{prefix}-{time.time_ns()}"
         path = os.path.join(d, seg)
-        if not (self._arrow_small(rows_hint) and self._arrow_write_dir(out, path)):
-            out.write.mode("overwrite").parquet(path)
+        self._write_dir(out, path, rows_hint)
         self._stamp_epoch(name, path)
         return seg
 
@@ -1228,23 +1293,15 @@ class TableStore:
         return os.path.join(self._dir(name), "_COLMAP.json")
 
     def _colmap(self, name: str) -> dict | None:
-        try:
-            with open(self._colmap_path(name)) as fh:
-                return json.load(fh)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return None
+        return _read_json(self._colmap_path(name))
 
     def _colmap_append(self, name: str, events: list[dict]) -> None:
         cm = self._colmap(name) or {"epoch": 0, "events": []}
         cm["epoch"] += 1
         for ev in events:
             cm["events"].append({**ev, "epoch": cm["epoch"]})
-        p = self._colmap_path(name)
         os.makedirs(self._dir(name), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(cm, fh)
-        os.replace(tmp, p)
+        self._publish_bytes(self._colmap_path(name), json.dumps(cm))
 
     def _stamp_epoch(self, name: str, data_dir: str) -> None:
         """Record the table's current schema epoch inside a freshly
@@ -1252,10 +1309,9 @@ class TableStore:
         means epoch 0)."""
         cm = self._colmap(name)
         if cm and cm["epoch"] > 0:
-            tmp = os.path.join(data_dir, "_EPOCH.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(str(cm["epoch"]))
-            os.replace(tmp, os.path.join(data_dir, "_EPOCH"))
+            self._publish_bytes(
+                os.path.join(data_dir, "_EPOCH"), str(cm["epoch"])
+            )
 
     @staticmethod
     def _data_epoch(data_dir: str) -> int:
@@ -2380,21 +2436,15 @@ class TableStore:
         }
         d = self._dir(name)
         os.makedirs(d, exist_ok=True)
-        p = os.path.join(d, f"_STATS-{name}.json")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-        os.replace(tmp, p)
+        self._publish_bytes(
+            os.path.join(d, f"_STATS-{name}.json"), json.dumps(doc)
+        )
         return doc
 
     def table_stats(self, name: str) -> dict | None:
         """Persisted ANALYZE stats for the table, or None if never
         analyzed. O(1) metadata — safe to call per planning decision."""
-        try:
-            with open(os.path.join(self._dir(name), f"_STATS-{name}.json")) as fh:
-                return json.load(fh)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return None
+        return _read_json(os.path.join(self._dir(name), f"_STATS-{name}.json"))
 
     def txn_version(self, app_id: str) -> int:
         """Last micro-batch id committed under `app_id` (-1 if none) —
@@ -2417,11 +2467,9 @@ class TableStore:
         replays the batch, which is the at-least-once contract — the
         marker narrows duplication to that crash window instead of
         every routine replay."""
-        p = os.path.join(self.root, f"_txn-{app_id}")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(int(version)))
-        os.replace(tmp, p)
+        self._publish_bytes(
+            os.path.join(self.root, f"_txn-{app_id}"), str(int(version))
+        )
 
     def clone(self, name: str, target: str) -> None:
         """Zero-copy shallow CLONE (the Delta `CREATE TABLE ... SHALLOW
@@ -2772,10 +2820,10 @@ class TableStore:
         _, keys = BUCKET_SPECS[name]
 
         def _flip_spec() -> None:
-            tmp = os.path.join(d, "_BUCKETSPEC.json.tmp")
-            with open(tmp, "w") as fh:
-                json.dump({"n": int(n_buckets), "keys": keys}, fh)
-            os.replace(tmp, os.path.join(d, "_BUCKETSPEC.json"))
+            self._publish_bytes(
+                os.path.join(d, "_BUCKETSPEC.json"),
+                json.dumps({"n": int(n_buckets), "keys": keys}),
+            )
 
         if self._current(name) is None:
             with _commit_lock(self.root, name):
@@ -3206,14 +3254,11 @@ class TableStore:
                         )
                         .distinct()
                     )
-                    n_dv = metrics["updated"] + metrics["deleted"]
-                    if not (
-                        self._arrow_small(n_dv)
-                        and self._arrow_write_dir(dv_df, os.path.join(d, dv))
-                    ):
-                        dv_df.write.mode("overwrite").parquet(
-                            os.path.join(d, dv)
-                        )
+                    self._write_dir(
+                        dv_df,
+                        os.path.join(d, dv),
+                        metrics["updated"] + metrics["deleted"],
+                    )
                     doc["deletes"] = doc["deletes"] + [
                         {
                             "path": dv,
@@ -3382,12 +3427,9 @@ class TableStore:
                         "pruned": len(base["segments"]) - len(touched),
                     }
                 dv = f"dv-{time.time_ns()}"
-                dv_df = dv_keys.distinct()
-                if not (
-                    self._arrow_small(n_upd + n_del)
-                    and self._arrow_write_dir(dv_df, os.path.join(d, dv))
-                ):
-                    dv_df.write.mode("overwrite").parquet(os.path.join(d, dv))
+                self._write_dir(
+                    dv_keys.distinct(), os.path.join(d, dv), n_upd + n_del
+                )
                 doc["deletes"] = doc["deletes"] + [
                     {"path": dv, "keys": list(on), "over": over}
                 ]
@@ -3407,12 +3449,7 @@ class TableStore:
             self._commit_manifest(name, doc)
             return metrics
 
-    def commit_multi(
-        self,
-        writes: dict[str, DataFrame],
-        crash_after_publish: int | None = None,
-        crash_before_journal: bool = False,
-    ) -> str:
+    def commit_multi(self, writes: dict[str, DataFrame]) -> str:
         """Multi-table ATOMIC commit (the cross-table transaction most
         single-table lakehouses lack): replace several tables so that
         after crash recovery either ALL new generations are visible or
@@ -3445,11 +3482,11 @@ class TableStore:
         past). recover_multi() must only run at startup with no
         in-flight commit_multi writers, like any WAL recovery.
 
-        `crash_after_publish` / `crash_before_journal` inject crashes
-        for tests (raise mid-protocol); publish order is sorted table
-        name, so injection points are deterministic
-        (`crash_after_publish=len(writes)` crashes after every rename
-        but before the catalog swap). Returns the txn id. Bucketed
+        Every step is one `self._publish`: the journal is publish 1,
+        the renames follow in sorted table name, and the catalog swap
+        is publish len(writes) + 2 — so a test injects a crash at any
+        step by failing the k-th publish on its store instance
+        (tests/faults.py). Returns the txn id. Bucketed
         tables are refused (their generations publish through the
         session catalog, not a rename)."""
         for name in writes:
@@ -3474,22 +3511,16 @@ class TableStore:
                 out.write.mode("overwrite").parquet(sdir)
                 self._stamp_epoch(name, sdir)  # travels with the rename
                 staged[name] = os.path.basename(sdir)
-            if crash_before_journal:
-                raise RuntimeError(
-                    f"injected crash before journal of {txn} "
-                    "(staged dirs orphaned; recover_multi rolls back)"
-                )
             targets = {
                 name: f"gen-{time.time_ns()}" for name in sorted(writes)
             }
             jdir = os.path.join(self.root, "_txn_multi")
             os.makedirs(jdir, exist_ok=True)
-            jpath = os.path.join(jdir, f"{txn}.json")
-            tmp = jpath + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"staged": staged, "targets": targets}, fh)
-            os.replace(tmp, jpath)  # DURABILITY COMMIT POINT
-            self._publish_txn(txn, staged, targets, crash_after_publish)
+            self._publish_bytes(  # DURABILITY COMMIT POINT
+                os.path.join(jdir, f"{txn}.json"),
+                json.dumps({"staged": staged, "targets": targets}),
+            )
+            self._publish_txn(txn, staged, targets)
             return txn
         finally:
             for lk in reversed(locks):
@@ -3500,20 +3531,13 @@ class TableStore:
         txn: str,
         staged: dict[str, str],
         targets: dict[str, str],
-        crash_after: int | None = None,
     ) -> None:
         """Publish a journaled txn: rename each staged dir to its
         journaled target (idempotent on replay: target already there
         -> skip; staged AND target both missing -> corruption, raise),
         swap the catalog pointer once for all tables (visibility
         commit), then retire the journal."""
-        names = sorted(staged)
-        for i, name in enumerate(names):
-            if crash_after is not None and i >= crash_after:
-                raise RuntimeError(
-                    f"injected crash after publishing {i} of "
-                    f"{len(staged)} tables in {txn}"
-                )
+        for name in sorted(staged):
             src = os.path.join(self._dir(name), staged[name])
             dst = os.path.join(self._dir(name), targets[name])
             if os.path.isdir(dst):
@@ -3526,12 +3550,7 @@ class TableStore:
                     "so this is corruption (or recovery ran concurrently "
                     "with a live writer), not a safe no-op"
                 )
-            os.rename(src, dst)
-        if crash_after is not None and crash_after >= len(names):
-            raise RuntimeError(
-                f"injected crash after all renames of {txn}, before the "
-                "catalog swap (readers still resolve every table OLD)"
-            )
+            self._publish(src, dst)
         self._catalog_swap(dict(targets))  # VISIBILITY COMMIT POINT
         jpath = os.path.join(self.root, "_txn_multi", f"{txn}.json")
         if os.path.exists(jpath):
@@ -3581,11 +3600,7 @@ class TableStore:
         `gen`. Callers that diffed a SPECIFIC generation must pass that
         exact generation — re-resolving _current() here would skip any
         source commit that landed between the pull and the advance."""
-        p = self._cursor_path(name, consumer)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(gen)
-        os.replace(tmp, p)
+        self._publish_bytes(self._cursor_path(name, consumer), gen)
 
     def create_consumer(self, name: str, consumer: str) -> None:
         """Register a CDC consumer at the table's CURRENT generation:
@@ -3700,11 +3715,7 @@ class TableStore:
         return os.path.join(self.root, f"_mv-{view}.json")
 
     def _mv_write_spec(self, view: str, spec: dict) -> None:
-        p = self._mv_spec_path(view)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(spec, fh)
-        os.replace(tmp, p)
+        self._publish_bytes(self._mv_spec_path(view), json.dumps(spec))
 
     def mview_spec(self, view: str) -> dict:
         with open(self._mv_spec_path(view)) as fh:
@@ -3804,6 +3815,8 @@ class TableStore:
             # of being skipped
             seed = self._mv_compute(self._read_gen(src, cur), spec)
             self.schemas.setdefault(view, seed.schema)
+            # a store reopened over this root must read and refresh it
+            self._persist_schema(view)
             self.replace(view, seed)
             self._write_cursor(src, f"__mv_{view}", os.path.basename(cur))
             spec["applied"] = os.path.basename(cur)

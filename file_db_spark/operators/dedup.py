@@ -162,9 +162,19 @@ def _cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
 def _held(spark: SparkSession, sf_dir: str) -> list:
     """Frames persisted inside lazily returned results: the result
     still reads them when it executes, so its builder cannot release
-    them; clear_cache(sf_dir) unpersists them."""
+    them; clear_cache(sf_dir) releases them."""
     with _STATE_LOCK:
         return _CACHE.setdefault(spark, {}).setdefault((sf_dir, "held"), [])
+
+
+def _release(df: DataFrame) -> None:
+    """Free `df`'s cached blocks, or an eager localCheckpoint's RDD
+    (DataFrame.unpersist cannot reach it), once nothing reads `df`."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    else:
+        df.unpersist()
 
 
 def clear_cache(sf_dir: str | None = None) -> None:
@@ -179,9 +189,9 @@ def clear_cache(sf_dir: str | None = None) -> None:
         ]
     for df in (d for v in dropped for d in (v if isinstance(v, list) else [v])):
         try:
-            df.unpersist()
+            _release(df)
         except Exception:
-            pass  # checkpointed frames have nothing to unpersist
+            pass  # a frame of a stopped session has nothing left to free
 
 
 def _q(name: str, oracle: str | None = None):
@@ -828,8 +838,10 @@ def _propagate_min_labels(
     No partition count is chosen here: the loop's state is
     O(candidate-pair endpoints), often thousands of rows when the
     corpus is not, and AQE coalesces every round's shuffle — the
-    persisted edge table included — to the width its bytes need. The
-    edge table is released once the labels are checkpointed."""
+    persisted edge table included — to the width its bytes need. A
+    round's checkpoint is released once the next round's is taken, and
+    the edge table once the labels converge; the returned labels stay
+    checkpointed until their owner releases them."""
     edges = edges.persist()
     labels = (
         edges.select(F.col("a").alias("v"), F.least("a", "b").alias("cand"))
@@ -846,6 +858,7 @@ def _propagate_min_labels(
             labels.unionByName(prop).groupBy("v").agg(F.min("lab").alias("lab"))
         ).localCheckpoint()
         new_sum = new_labels.agg(F.sum("lab")).collect()[0][0]
+        _release(labels)  # new_labels' checkpoint truncated its lineage
         labels = new_labels
         if new_sum == prev_sum:
             break
@@ -866,6 +879,7 @@ def _build_x7_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
     )
     labels = _propagate_min_labels(edges, "x7")
+    _held(spark, sf_dir).append(labels)
     return labels.select(
         F.col("v").alias("doc_id"), F.col("lab").cast("bigint").alias("component_id")
     )

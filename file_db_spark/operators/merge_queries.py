@@ -2250,15 +2250,31 @@ def g24_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
             if e.startswith("staged-")
         )
 
-    # txn 1: journal lands, crash strands 'files' (publish order is
-    # sorted table name: dirs first)
-    try:
-        store.commit_multi(
-            {"files": wave_f, "dirs": wave_d}, crash_after_publish=1
-        )
-        raise AssertionError("injected publish crash did not fire")
-    except RuntimeError:
+    class _Crash(Exception):
         pass
+
+    def crashed_commit(writes: dict, k: int) -> None:
+        """commit_multi(writes) dying at its k-th publish: the journal,
+        one rename per table in sorted name order, the catalog swap."""
+        seen = []
+
+        def failing(src: str, dst: str) -> None:
+            seen.append(dst)
+            if len(seen) == k:
+                raise _Crash(dst)
+            TableStore._publish(src, dst)
+
+        store._publish = failing
+        try:
+            store.commit_multi(writes)
+            raise AssertionError(f"no crash at publish {k}")
+        except _Crash:
+            pass
+        finally:
+            del store._publish
+
+    # txn 1: journal and 'dirs' land, the crash strands 'files'
+    crashed_commit({"files": wave_f, "dirs": wave_d}, 3)
 
     def proj_f(df: DataFrame, part: str) -> DataFrame:
         return df.select(
@@ -2314,15 +2330,8 @@ def g24_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "meta_rec1", gens("files"), gens("dirs"), float(pending_journals()), n_fwd
     )
 
-    # txn 2: crash BEFORE the journal — never committed, must vanish
-    try:
-        store.commit_multi(
-            {"files": f1.select(*fcols), "dirs": d1.select(*dcols)},
-            crash_before_journal=True,
-        )
-        raise AssertionError("injected pre-journal crash did not fire")
-    except RuntimeError:
-        pass
+    # txn 2: crash AT the journal — never committed, must vanish
+    crashed_commit({"files": f1.select(*fcols), "dirs": d1.select(*dcols)}, 1)
     meta_crash2 = meta_row(
         "meta_crash2", staged_orphans(), pending_journals(), None, None
     )
@@ -2806,8 +2815,7 @@ def g28_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cursor — roll the cursor back to the pre-wave generation and
     # refresh again; the applied-generation guard must NOT re-apply
     gens = store.generations("file")
-    with open(store._cursor_path("file", "__mv_dir_rollup"), "w") as fh:
-        fh.write(os.path.basename(gens[-2]))
+    store._write_cursor("file", "__mv_dir_rollup", os.path.basename(gens[-2]))
     replay = store.refresh_mview("dir_rollup")
     mv2 = store.read("dir_rollup").select(
         F.lit("mv2").alias("part"),

@@ -16,6 +16,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..filedb.store import publish, publish_bytes
 from ..streaming import events_stream as es
 from ..localframe import local_df
 
@@ -27,6 +28,21 @@ def _drain(stream_df: DataFrame, prefix: str, output_mode: str) -> DataFrame:
     return es.run_to_memory(
         stream_df, f"{prefix}_{uuid.uuid4().hex[:8]}", output_mode=output_mode
     )
+
+
+def _swap_in(df: DataFrame, data_dir: str, batch_id: int) -> None:
+    """A foreachBatch sink's generation swap: write `df` next to
+    `data_dir`, then publish it in its place. A crash mid-write leaves
+    the old dir intact, but the old dir is removed BEFORE the publish,
+    so a crash between the two leaves no data dir at all."""
+    import os
+    import shutil
+
+    tmp = data_dir + f".gen{batch_id}"
+    df.write.mode("overwrite").parquet(tmp)
+    if os.path.isdir(data_dir):
+        shutil.rmtree(data_dir)
+    publish(tmp, data_dir)
 
 
 def s1_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,8 +309,8 @@ def s7_stream_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily rollup is then served FROM the maintained hourly partials,
     never from raw events — O(changed hours) per refresh at 100 TB.
 
-    The store is a scratch parquet table using the engine's
-    generation-swap write (atomic overwrite); availableNow drains the
+    The store is a scratch parquet table rewritten per batch by
+    _swap_in (which is not crash-safe); availableNow drains the
     static source so the final store equals the batch hourly aggregate,
     which is why the e8-style daily oracle hash-matches exactly
     (decimal partials are exact under re-aggregation)."""
@@ -328,16 +344,7 @@ def s7_stream_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 merged = kept.unionByName(b)
             else:
                 merged = b
-            # generation swap: write the new generation next to the old,
-            # then atomic-rename — a crash mid-write never corrupts the
-            # serving store (mirrors filedb/store.py's table swap)
-            tmp = data_dir + f".gen{batch_id}"
-            merged.write.mode("overwrite").parquet(tmp)
-            if os.path.isdir(data_dir):
-                import shutil
-
-                shutil.rmtree(data_dir)
-            os.rename(tmp, data_dir)
+            _swap_in(merged, data_dir, batch_id)
         finally:
             b.unpersist()
 
@@ -501,14 +508,8 @@ def s9_stream_cms_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         else:
             merged = part
-        tmp = data_dir + f".gen{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(data_dir):
-            shutil.rmtree(data_dir)
-        os.rename(tmp, data_dir)
-        with open(marker + ".tmp", "w") as fh:
-            fh.write(str(batch_id))
-        os.replace(marker + ".tmp", marker)
+        _swap_in(merged, data_dir, batch_id)
+        publish_bytes(marker, str(batch_id))
 
     src = es.events_source(spark, sf_dir)
     with es.stream_shuffle(spark):
@@ -803,11 +804,7 @@ def s11_stream_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         else:
             merged = part
-        tmp = data_dir + f".gen{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(data_dir):
-            shutil.rmtree(data_dir)
-        os.rename(tmp, data_dir)
+        _swap_in(merged, data_dir, batch_id)
 
     src = es.events_source(spark, sf_dir)
     with es.stream_shuffle(spark):
@@ -938,20 +935,18 @@ def _replay_batches(spark: SparkSession, sf_dir: str):
     )
 
 
-def _place_batch_file(b, i: int, root: str, sdir: str) -> None:
-    """Write replay batch i as one parquet file with a strictly
-    increasing mtime (pins the FileStreamSource replay order)."""
+def _arrive(df: DataFrame, sdir: str, name: str, i: int) -> None:
+    """Land `df` in the stream dir `sdir` as ONE parquet file `name`,
+    published whole (a FileStreamSource never lists a partial file),
+    with mtime 1_000_000 + 100*i: strictly increasing mtimes pin the
+    replay order."""
     import glob
     import os
-    import shutil
 
-    from pyspark.sql import functions as F
-
-    tmp = os.path.join(root, f"w{i}")
-    b.filter(F.col("b") == i).drop("b").repartition(1).write.parquet(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-    dst = os.path.join(sdir, f"b{i}.parquet")
-    shutil.move(part, dst)
+    tmp = os.path.join(os.path.dirname(sdir), f"w{i}")
+    df.repartition(1).write.parquet(tmp)
+    dst = os.path.join(sdir, name)
+    publish(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dst)
     os.utime(dst, (1_000_000 + i * 100, 1_000_000 + i * 100))
 
 
@@ -1009,7 +1004,7 @@ def s13_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdir = os.path.join(root, "stream")
     os.makedirs(sdir)
     for i in range(S13_BATCHES):
-        _place_batch_file(b, i, root, sdir)
+        _arrive(b.where(F.col("b") == i).drop("b"), sdir, f"b{i}.parquet", i)
     stream = (
         spark.readStream.schema(
             "event_id long, ts timestamp, user_id long, event_type string, value double"
@@ -1127,10 +1122,10 @@ def s14_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFram
 
     half = S13_BATCHES // 2
     for i in range(half):
-        _place_batch_file(b, i, root, sdir)
+        _arrive(b.where(F.col("b") == i).drop("b"), sdir, f"b{i}.parquet", i)
     run_once()  # run 1: batches 0..half-1, then stop
     for i in range(half, S13_BATCHES):
-        _place_batch_file(b, i, root, sdir)
+        _arrive(b.where(F.col("b") == i).drop("b"), sdir, f"b{i}.parquet", i)
     run_once()  # run 2: restored offsets + watermark, batches half..
     out = spark.read.parquet(sink).localCheckpoint(eager=True)
     shutil.rmtree(root, ignore_errors=True)
@@ -1189,7 +1184,6 @@ def s15_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions at 100 TB — file-source backpressure
     (maxFilesPerTrigger), O(change rate) appends per batch, no
     dimension rewrite ever, history derived at read time."""
-    import glob
     import os
     import shutil
     import tempfile
@@ -1217,14 +1211,8 @@ def s15_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(sdir)
     dim_cols = ["id", "name", "dir_id", "size", "mtime"]
     for i, w in enumerate(waves):
-        tmp = os.path.join(root, f"w{i}")
-        w.select(*dim_cols, F.lit(i + 1).cast("int").alias("wave")).repartition(
-            1
-        ).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(sdir, f"wave{i}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (1_000_000 + i * 100, 1_000_000 + i * 100))
+        arrival = w.select(*dim_cols, F.lit(i + 1).cast("int").alias("wave"))
+        _arrive(arrival, sdir, f"wave{i}.parquet", i)
 
     store = TableStore(
         spark, os.path.join(root, "cat"), {"dim": log_schema}, bucketing=False
@@ -1363,7 +1351,6 @@ def s16_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     the file-source backpressure envelope. This is the continuous
     ingestion quality gate a 100 TB pipeline runs in front of every
     table."""
-    import glob
     import os
     import shutil
     import tempfile
@@ -1381,14 +1368,8 @@ def s16_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(sdir)
     cols = [f.name for f in schemas.FILE.fields]
     for i, w in enumerate(waves):
-        tmp = os.path.join(root, f"w{i}")
-        w.select(*cols).withColumn("wave", F.lit(i + 1).cast("int")).repartition(
-            1
-        ).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(sdir, f"wave{i}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (1_000_000 + i * 100, 1_000_000 + i * 100))
+        arrival = w.select(*cols).withColumn("wave", F.lit(i + 1).cast("int"))
+        _arrive(arrival, sdir, f"wave{i}.parquet", i)
 
     store = TableStore(
         spark, os.path.join(root, "cat"), {"file": schemas.FILE}, bucketing=False
@@ -1499,7 +1480,6 @@ def s17_stream_row_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     path pays a per-covered-segment anti-join until the bounded-
     frequency compaction, and ingestion never stalls behind a table
     rewrite."""
-    import glob
     import os
     import shutil
     import tempfile
@@ -1525,14 +1505,8 @@ def s17_stream_row_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdir = os.path.join(root, "stream")
     os.makedirs(sdir)
     for i, w in enumerate(waves):
-        tmp = os.path.join(root, f"w{i}")
-        w.select(*cols).withColumn("wave", F.lit(i + 1).cast("int")).repartition(
-            1
-        ).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(sdir, f"wave{i}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (1_000_000 + i * 100, 1_000_000 + i * 100))
+        arrival = w.select(*cols).withColumn("wave", F.lit(i + 1).cast("int"))
+        _arrive(arrival, sdir, f"wave{i}.parquet", i)
 
     store = TableStore(
         spark, os.path.join(root, "cat"), {"dim": dim_schema}, bucketing=False
@@ -1656,15 +1630,11 @@ def s18_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(-2, sent_ts, -1, "click", 0.0), (-3, sent_ts, -1, "purchase", 0.0)],
         schema,
     )
-    import glob
 
     root = tempfile.mkdtemp(prefix="fdb_s18_")
     sdir = os.path.join(root, "stream")
     os.makedirs(sdir)
-    tmp = os.path.join(root, "w0")
-    e.unionByName(sentinels).repartition(1).write.parquet(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-    shutil.move(part, os.path.join(sdir, "b0.parquet"))
+    _arrive(e.unionByName(sentinels), sdir, "b0.parquet", 0)
 
     def src() -> DataFrame:
         return spark.readStream.schema(schema).parquet(sdir)
@@ -1748,7 +1718,6 @@ def s19_stream_cdc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate maintains its rollups for megabytes per batch, where the
     reference's polling loop re-ran the full aggregate every 5
     seconds."""
-    import glob
     import os
     import shutil
     import tempfile
@@ -1790,14 +1759,8 @@ def s19_stream_cdc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdir = os.path.join(root, "stream")
     os.makedirs(sdir)
     for i, w in enumerate([f2, f3]):
-        tmp = os.path.join(root, f"w{i}")
-        w.select(*cols).withColumn("wave", F.lit(i + 1).cast("int")).repartition(
-            1
-        ).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(sdir, f"wave{i}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (1_000_000 + i * 100, 1_000_000 + i * 100))
+        arrival = w.select(*cols).withColumn("wave", F.lit(i + 1).cast("int"))
+        _arrive(arrival, sdir, f"wave{i}.parquet", i)
 
     store = TableStore(
         spark,

@@ -54,10 +54,11 @@ def get_spark(
         # checkpoint file (state-store deltas included) through a
         # future pool the task must await; thread dumps during the s8
         # join stage show every task parked in
-        # ChecksumCheckpointFileManager.awaitResult. The sidecars only
-        # detect bit-rot inside a checkpoint dir — redundant under
-        # fsynced atomic renames — and cost ~2x per stateful batch;
-        # re-enable on object stores via SPARK_GRAFT_CKPT_CHECKSUM.
+        # ChecksumCheckpointFileManager.awaitResult. The sidecars catch
+        # a torn or rotted checkpoint file — nothing else does: Spark
+        # renames its own checkpoint files, outside the store's fsynced
+        # publish() — and cost ~2x per stateful batch, so they are off
+        # as a speed trade; re-enable via SPARK_GRAFT_CKPT_CHECKSUM.
         .config(
             "spark.sql.streaming.checkpoint.fileChecksum.enabled",
             os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM", "false"),

@@ -60,21 +60,14 @@ def dir_stat_contributions(delta: DataFrame) -> DataFrame:
     )
 
 
-def apply_cdc_batch(
-    store,
-    source: str,
-    consumer: str,
-    target: str,
-    crash_before_advance: bool = False,
-) -> dict:
+def apply_cdc_batch(store, source: str, consumer: str, target: str) -> dict:
     """One incremental-apply step: pull the consumer's outstanding
     delta, MERGE its contributions into `target` (update = add
     deltas; insert = first sighting; delete = group count reaches
-    zero), then advance the cursor. `crash_before_advance` injects a
-    crash between the committed apply and the cursor advance — the
-    window the at-least-once contract is about (pinned in
-    tests/test_streaming.py). Returns the merge metrics plus the
-    number of delta rows consumed."""
+    zero), then advance the cursor. A crash between the committed apply
+    and the cursor advance (the store's last publish) is the window the
+    at-least-once contract is about (pinned in tests/test_streaming.py).
+    Returns the merge metrics plus the number of delta rows consumed."""
     delta = store.changes_since(
         source, consumer, ["id"], ["name", "dir_id", "size", "mtime"]
     ).persist()
@@ -100,11 +93,6 @@ def apply_cdc_batch(
                 "total_size": F.expr("CAST(s.ds AS DECIMAL(28,6))"),
             },
             when_matched_delete="t.n_files + s.dn = 0",
-        )
-    if crash_before_advance:
-        raise RuntimeError(
-            "injected crash after apply, before cursor advance "
-            "(re-pull must return the same delta — at-least-once)"
         )
     store.advance_cursor(source, consumer)
     return {**metrics, "delta_rows": n_delta}

@@ -3,7 +3,7 @@
 Pins the three claims the g27 oracle can only assert as literals:
 the bucketed plan really has FEWER exchanges than the unbucketed
 control (not just zero by accident), bucket pruning really selects one
-bucket, and the planner flag toggled for the pruning probe is restored.
+bucket, and the pruning probe leaves the session's planner flag alone.
 """
 
 from __future__ import annotations
@@ -12,6 +12,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.conf import RuntimeConfig
 
 from file_db_spark.filedb import bucketing
 
@@ -85,6 +86,18 @@ def test_bucket_pruning_selects_one_bucket(spark, tables):
     assert "SelectedBucketsCount" not in bucketing.physical_plan(
         t_f.filter(F.col("id") == 42)
     )
+
+
+def test_bucket_pruning_probe_never_sets_session_conf(tables, monkeypatch):
+    """selected_buckets runs inside suite members that share the session
+    with concurrent queries, so it may not flip a session-wide conf."""
+    _, _, t_f, _, _ = tables
+
+    def refuse(self, key, value):
+        raise AssertionError(f"session conf set: {key}={value}")
+
+    monkeypatch.setattr(RuntimeConfig, "set", refuse)
+    assert bucketing.selected_buckets(t_f.filter(F.col("id") == 42)) == (1, 8)
 
 
 def test_mismatched_bucket_counts_still_correct(spark, tables):

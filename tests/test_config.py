@@ -4,6 +4,8 @@ child-path rule (crawl frontier vs catalog identity keys)."""
 import json
 import os
 
+import pytest
+
 from file_db_spark.filedb import config
 from file_db_spark.filedb.scan import child_path
 from file_db_spark.functions.paths import strip_trailing_slashes
@@ -25,6 +27,17 @@ def test_round_trip(tmp_path):
     assert config.load_config(str(p)) == {"crawl_batch_size": 3, "extra": "x"}
     text = p.read_text()
     assert json.loads(text) and "\n" in text  # pretty-printed
+
+
+def test_failed_write_keeps_the_previous_file(tmp_path):
+    """A write that dies midway (here: a value json cannot serialize)
+    must not leave a truncated file, which would load as {}."""
+    p = tmp_path / "config.json"
+    config.write_config({"crawl_batch_size": 3}, str(p))
+    before = p.read_bytes()
+    with pytest.raises(TypeError):
+        config.write_config({"crawl_batch_size": object()}, str(p))
+    assert p.read_bytes() == before
 
 
 def test_create_file_touches(tmp_path, monkeypatch):

@@ -50,7 +50,8 @@ def test_ensure_confs_coalesces_persisted_frames_on_a_bare_session(spark):
 
 
 @pytest.mark.parametrize(
-    "name", ["x3_ngram_jaccard", "x4_minhash_lsh", "x19_pagerank"]
+    "name",
+    ["x3_ngram_jaccard", "x4_minhash_lsh", "x7_dup_components", "x19_pagerank"],
 )
 def test_clear_cache_releases_what_an_entry_persisted(spark, sf_dir, name):
     # compare RDD ids, not counts: the ContextCleaner may drop older

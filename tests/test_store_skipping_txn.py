@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from faults import InjectedCrash, crash_at
 from file_db_spark.filedb.store import TableStore
 
 _SCHEMA = T.StructType(
@@ -211,11 +212,9 @@ def test_crash_after_journal_rolls_forward(spark, tmp_path):
     st = TableStore(spark, str(tmp_path / "cat"), dict(_TWO), bucketing=False)
     st.replace("a", _rows(spark, 0, 5))
     st.replace("b", _rows(spark, 0, 5))
-    with pytest.raises(RuntimeError, match="injected crash after"):
-        st.commit_multi(
-            {"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)},
-            crash_after_publish=1,
-        )
+    crash_at(st, 3)  # journal, then 'a' published; crash at 'b'
+    with pytest.raises(InjectedCrash):
+        st.commit_multi({"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)})
     # publish order is sorted: 'a' renamed, 'b' stranded, journal kept —
     # but the catalog pointer never swapped, so a reader sees BOTH
     # tables OLD (no torn visibility, unlike the pre-pointer protocol)
@@ -232,19 +231,17 @@ def test_crash_after_journal_rolls_forward(spark, tmp_path):
 
 def test_reader_between_renames_sees_all_old_then_all_new(spark, tmp_path):
     """The root-catalog-pointer contract: with every staged dir
-    RENAMED but the pointer not yet swapped (crash_after_publish =
-    len(writes)), a reader resolves every table at its OLD
+    RENAMED but the pointer not yet swapped (a crash at the catalog
+    swap, publish len(writes) + 2), a reader resolves every table at its OLD
     generation; after recovery, every table at its NEW one. No
     interleaving can observe a mixed catalog."""
     st = TableStore(spark, str(tmp_path / "cat"), dict(_TWO), bucketing=False)
     st.replace("a", _rows(spark, 0, 5))
     st.replace("b", _rows(spark, 0, 5))
     v0 = st.catalog_version()
-    with pytest.raises(RuntimeError, match="before the catalog swap"):
-        st.commit_multi(
-            {"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)},
-            crash_after_publish=2,
-        )
+    crash_at(st, 4)  # journal + 2 renames published; crash at the swap
+    with pytest.raises(InjectedCrash):
+        st.commit_multi({"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)})
     # both new generations physically exist as gen- dirs ...
     assert len(st.generations("a")) == 2 and len(st.generations("b")) == 2
     # ... yet the visibility point (the pointer) has not moved
@@ -271,11 +268,9 @@ def test_recovery_never_regresses_a_later_commit(spark, tmp_path):
     st = TableStore(spark, str(tmp_path / "cat"), dict(_TWO), bucketing=False)
     st.replace("a", _rows(spark, 0, 5))
     st.replace("b", _rows(spark, 0, 5))
-    with pytest.raises(RuntimeError, match="before the catalog swap"):
-        st.commit_multi(
-            {"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)},
-            crash_after_publish=2,
-        )
+    crash_at(st, 4)  # journal + 2 renames published; crash at the swap
+    with pytest.raises(InjectedCrash):
+        st.commit_multi({"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)})
     st.replace("a", _rows(spark, 50, 55))  # later commit wins
     out = st.recover_multi()
     assert list(out.values()) == ["rolled-forward"]
@@ -283,15 +278,13 @@ def test_recovery_never_regresses_a_later_commit(spark, tmp_path):
     assert {r["id"] for r in st.read("b").collect()} == set(range(20, 25))
 
 
-def test_crash_before_journal_rolls_back(spark, tmp_path):
+def test_crash_at_journal_rolls_back(spark, tmp_path):
     st = TableStore(spark, str(tmp_path / "cat"), dict(_TWO), bucketing=False)
     st.replace("a", _rows(spark, 0, 5))
     st.replace("b", _rows(spark, 0, 5))
-    with pytest.raises(RuntimeError, match="injected crash before"):
-        st.commit_multi(
-            {"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)},
-            crash_before_journal=True,
-        )
+    crash_at(st, 1)  # the journal publish
+    with pytest.raises(InjectedCrash):
+        st.commit_multi({"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)})
     staged = [
         e
         for t in ("a", "b")
@@ -318,11 +311,9 @@ def test_recovery_survives_instance_lifetime(spark, tmp_path):
     st = TableStore(spark, str(tmp_path / "cat"), dict(_TWO), bucketing=False)
     st.replace("a", _rows(spark, 0, 5))
     st.replace("b", _rows(spark, 0, 5))
-    with pytest.raises(RuntimeError):
-        st.commit_multi(
-            {"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)},
-            crash_after_publish=0,  # crash before ANY publish, journal kept
-        )
+    crash_at(st, 2)  # journal kept, crash before ANY rename
+    with pytest.raises(InjectedCrash):
+        st.commit_multi({"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)})
     st2 = TableStore(spark, str(tmp_path / "cat"), dict(_TWO), bucketing=False)
     out = st2.recover_multi()
     assert list(out.values()) == ["rolled-forward"]
@@ -346,11 +337,9 @@ def test_vacuum_ignores_staged_and_journal(spark, tmp_path):
     st = TableStore(spark, str(tmp_path / "cat"), dict(_TWO), bucketing=False)
     st.replace("a", _rows(spark, 0, 5))
     st.replace("b", _rows(spark, 0, 5))
-    with pytest.raises(RuntimeError):
-        st.commit_multi(
-            {"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)},
-            crash_after_publish=0,
-        )
+    crash_at(st, 2)
+    with pytest.raises(InjectedCrash):
+        st.commit_multi({"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)})
     st.vacuum(retain=1)
     out = st.recover_multi()
     assert list(out.values()) == ["rolled-forward"]
@@ -428,11 +417,9 @@ def test_catalog_pointer_is_cross_instance(spark, tmp_path):
     st = TableStore(spark, str(tmp_path / "cat"), dict(_TWO), bucketing=False)
     st.replace("a", _rows(spark, 0, 5))
     st.replace("b", _rows(spark, 0, 5))
-    with pytest.raises(RuntimeError, match="before the catalog swap"):
-        st.commit_multi(
-            {"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)},
-            crash_after_publish=2,
-        )
+    crash_at(st, 4)  # journal + 2 renames published; crash at the swap
+    with pytest.raises(InjectedCrash):
+        st.commit_multi({"a": _rows(spark, 10, 15), "b": _rows(spark, 20, 25)})
     st2 = TableStore(spark, str(tmp_path / "cat"), dict(_TWO), bucketing=False)
     assert {r["id"] for r in st2.read("a").collect()} == set(range(0, 5))
     st2.recover_multi()

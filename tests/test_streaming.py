@@ -286,6 +286,7 @@ def test_s19_cdc_apply_at_least_once(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from faults import InjectedCrash, crash_at
     from file_db_spark.filedb.store import TableStore
     from file_db_spark.streaming.cdc_source import apply_cdc_batch
 
@@ -340,8 +341,10 @@ def test_s19_cdc_apply_at_least_once(spark, tmp_path):
     before = {(r["op"], r["id"]) for r in pull().collect()}
     assert before == {("U", 1), ("D", 3), ("I", 4)}
 
-    with pytest.raises(RuntimeError, match="before cursor advance"):
-        apply_cdc_batch(st, "dim", "ivm", "dir_stats", crash_before_advance=True)
+    # crash after the apply committed, at the cursor advance
+    crash_at(st, 1, dst_contains="_CURSOR-ivm")
+    with pytest.raises(InjectedCrash):
+        apply_cdc_batch(st, "dim", "ivm", "dir_stats")
     # the apply committed ...
     got = {
         r["dir_id"]: (r["n_files"], float(r["total_size"]))
