@@ -33,6 +33,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from file_db_spark import frames
 from file_db_spark import operators as ops
 from file_db_spark.session import get_spark
 
@@ -217,8 +218,7 @@ def main() -> None:
             # derived-table caches (x3 pairs, x7 labels, trained BPE)
             # would turn the second run into a cache read — clear so
             # both runs time the real pipeline
-            ops.dedup.clear_cache(sf_dir)
-            ops.textops.clear_cache(sf_dir)
+            frames.clear(sf_dir)
             t0 = time.perf_counter()
             fn(spark, sf_dir).count()
             run = time.perf_counter() - t0

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import frames
 from ..functions.paths import strip_trailing_slashes
 from . import merge, scan, scheduler, schemas, search, views
 from .hashing import hash_files
@@ -323,10 +324,7 @@ class Engine:
         )
         if any_removals:
             self._apply_removals(d_res.removal_queue, f_res.removal_queue, now)
-        listing.unpersist()
-        for scratch in (d_res.scratch, f_res.scratch):
-            if scratch is not None:
-                scratch.unpersist()
+        frames.release(listing, d_res.scratch, f_res.scratch)
         self._refresh_mviews()
         return len(frontier)
 
@@ -428,6 +426,9 @@ class Engine:
             when_matched_delete="true",
         )
         self.store.delete_rows("hash_control", file_victims, ["file_id"])
+        frames.release(
+            dir_archive_rows, file_archive_rows, dir_victims, file_victims
+        )
 
     # -- hash wave (§3.1 stage 6) ------------------------------------------
     def hash_once(
@@ -498,8 +499,10 @@ class Engine:
             todo = have.unionByName(legacy.join(io_paths, "file_id", "left"))
         n = todo.count()
         if n == 0:
+            frames.release(work)
             return 0  # nothing claimed: the control state is unchanged
         staged = hash_files(todo).localCheckpoint(eager=True)
+        frames.release(work)
         # entity commit O(changes): bucketed MERGE on the hash table
         # (merge_hashes' M4/M5 clauses — upsert_hashes_into); control
         # commit O(processed): ONE deletion vector dropping the
@@ -510,6 +513,7 @@ class Engine:
         self.store.delete_rows(
             "hash_control", staged.select("file_id"), ["file_id"]
         )
+        frames.release(staged)
         # hash waves commit to `hash` too — keep views registered over
         # it (or any engine table) fresh, not just the crawl loop's
         self._refresh_mviews()

@@ -26,11 +26,10 @@ hashing.py computes true MD5+SHA1 per FileHandler/HashFile.py:6-51).
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import Column, DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F
 
+from .. import frames
 from ..catalog import load_table
 from ..localframe import local_df
 
@@ -42,34 +41,25 @@ __all__ = [
     "FIXTURE_CTES",
 ]
 
-# Derived-catalog cache: the fixture tables are deterministic functions
-# of (session, sf_dir), and a dozen registry queries each need all
-# three — re-deriving them per query repeats the distinct/row_number/
-# join stages for identical 20-row/500-row results. This is the
-# single-process analog of materializing the catalog tables once (the
-# real engine's store.py does exactly that with parquet generations).
-# Weakly keyed on the session itself, so a new session that reuses a
-# dead one's id() can never read that session's checkpoints.
-_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
-
-
 def _cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    key = (sf_dir, name)
-    df = _CACHE.get(spark, {}).get(key)
-    if df is None:
-        # Eager localCheckpoint, not persist: the fixture tables feed
-        # DOZENS of registry queries per session (consumer depth >> 2,
-        # the b645979 rule), and classic PySpark re-ANALYZES the full
-        # logical plan of every persisted subtree on each DataFrame op
-        # that references it — measured 1.9 s of driver-side plan
-        # building for g2's 8-part union alone. As RDD leaves the
-        # fixtures cost each consumer O(1) analysis. They are tiny
-        # (20-500 rows) derived catalog tables, re-derived per session;
-        # at cluster scale this is "materialize the catalog tables
-        # once" (store.py does it with parquet generations).
-        df = build().localCheckpoint(eager=True)
-        _CACHE.setdefault(spark, {})[key] = df
-    return df
+    """The fixture tables are deterministic functions of (session,
+    sf_dir), and a dozen registry queries each need all three —
+    re-deriving them per query repeats the distinct/row_number/join
+    stages for identical 20-row/500-row results. This is the
+    single-process analog of materializing the catalog tables once (the
+    real engine's store.py does exactly that with parquet generations),
+    so they are pinned: they live as long as their session.
+
+    Eager localCheckpoint, not persist: the fixture tables feed DOZENS
+    of registry queries per session (consumer depth >> 2, the b645979
+    rule), and classic PySpark re-ANALYZES the full logical plan of
+    every persisted subtree on each DataFrame op that references it —
+    measured 1.9 s of driver-side plan building for g2's 8-part union
+    alone. As RDD leaves the fixtures cost each consumer O(1)
+    analysis."""
+    return frames.cached(
+        spark, sf_dir, name, lambda: build().localCheckpoint(eager=True), pinned=True
+    )
 
 
 def _lit_ts(s: str) -> Column:

@@ -66,7 +66,7 @@ class DirMergeResult:
     directory: DataFrame       # new state of the entity table
     new_dirs: DataFrame        # inserted rows (to seed control, M9)
     removal_queue: DataFrame   # vanished dirs -> deferred delete (dir_id, dir_path)
-    scratch: DataFrame | None = None  # persisted change slice; unpersist after the wave's writes
+    scratch: DataFrame | None = None  # persisted change slice; release after the wave's writes
     inserts: DataFrame | None = None  # full insert rows (store.apply_changes input)
     updates: DataFrame | None = None  # full replacement rows for O5-changed keys
 
@@ -174,7 +174,7 @@ class FileMergeResult:
     file: DataFrame            # new state of the entity table
     hash_schedule: DataFrame   # new/changed files to (re)hash (hash_control rows)
     removal_queue: DataFrame   # vanished files -> deferred delete (file_id)
-    scratch: DataFrame | None = None  # persisted change slice; unpersist after the wave's writes
+    scratch: DataFrame | None = None  # persisted change slice; release after the wave's writes
     inserts: DataFrame | None = None  # full insert rows (store.apply_changes input)
     updates: DataFrame | None = None  # full replacement rows for O5-changed keys
 

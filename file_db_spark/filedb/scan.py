@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import frames
 from ..functions.paths import strip_trailing_slashes, strip_trailing_slashes_col
 from ..localframe import local_df
 
@@ -146,7 +147,7 @@ def crawl_tree(
     persisted + materialized FROM the level caches, after which every
     per-level cache is released (ADVICE r4: a long-lived crawl driver
     must not accumulate O(levels) cached DataFrames). The caller owns
-    the single returned cache handle — `.unpersist()` it when done."""
+    the single returned cache handle — `frames.release` it when done."""
     all_levels: list[DataFrame] = []
     frontier = local_df(spark, 
         [(p,) for p in dict.fromkeys(roots)], "dir_path string"
@@ -173,8 +174,7 @@ def crawl_tree(
         out = out.unionByName(df)
     out = out.persist()
     out.count()  # copy level caches into the one result cache
-    for df in all_levels:
-        df.unpersist()
+    frames.release(*all_levels)
     return out
 
 

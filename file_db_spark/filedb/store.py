@@ -24,6 +24,7 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from .. import frames
 from ..localframe import local_df
 
 _LOG = logging.getLogger(__name__)
@@ -2330,6 +2331,7 @@ class TableStore:
             for nm in sorted(expectations)
         ]
         row = quarantined.agg(*agg).collect()[0].asDict()
+        frames.release(quarantined)
         metrics = {nm: int(row[nm] or 0) for nm in sorted(expectations)}
         metrics["_quarantined"] = int(row["_quarantined"] or 0)
         metrics["_accepted"] = self.read(name).count()
@@ -2581,10 +2583,8 @@ class TableStore:
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
-        # no unpersist: `out` is a checkpointed frame, and
-        # Dataset.unpersist only releases CacheManager entries — the
-        # checkpoint blocks free via ContextCleaner on GC (ADVICE r10)
         self.append(name, out, rows_hint=int(obs.get.get("n", 0)))
+        frames.release(out)
 
     def evolve(self, name: str, new_schema: T.StructType) -> None:
         """Additive schema evolution (the Delta/Iceberg ADD COLUMN
@@ -3298,7 +3298,7 @@ class TableStore:
                 self._commit_manifest(name, doc)
                 return metrics
             finally:
-                classified.unpersist()
+                frames.release(classified)
 
     def apply_changes(
         self,
@@ -3570,6 +3570,9 @@ class TableStore:
         journaled: set[str] = set()
         if os.path.isdir(jdir):
             for j in sorted(os.listdir(jdir)):
+                if j.endswith(".json.tmp"):
+                    # a crash at the journal publish: never committed
+                    os.remove(os.path.join(jdir, j))
                 if not j.endswith(".json"):
                     continue
                 txn = j[: -len(".json")]
@@ -3707,9 +3710,8 @@ class TableStore:
     # pinned source generation semi-joined to exactly those group
     # keys. Refresh stays O(changed groups) in the common case and
     # O(retracted-extreme groups) worst case — never the whole view —
-    # and everything still commits as ONE MERGE, so the crash window
-    # stays the single spec-marker os.replace the replay guard
-    # documents.
+    # and everything still commits as ONE MERGE, bracketed by the
+    # spec's intent and applied markers (see refresh_mview).
 
     def _mv_spec_path(self, view: str) -> str:
         return os.path.join(self.root, f"_mv-{view}.json")
@@ -3825,12 +3827,14 @@ class TableStore:
     def refresh_mview(self, view: str) -> dict:
         """Incrementally refresh `view` from its source's CDC feed.
         Returns merge metrics plus 'status': 'applied', 'noop' (source
-        unchanged), or 'replayed' (a prior refresh committed but
-        crashed before advancing the cursor — the cursor is rolled
-        forward WITHOUT re-applying, closing the at-least-once window
-        everywhere except a crash between the MERGE commit and the
-        spec-marker write, the same one-os.replace window the
-        streaming sinks' txn_version markers document). The whole
+        unchanged), 'reseeded', or 'replayed' (a prior refresh
+        committed but crashed before advancing the cursor — the cursor
+        is rolled forward WITHOUT re-applying). Before its MERGE a
+        refresh publishes an intent in the spec (`pending` = the
+        diffed source generation, `pending_view` = the view's
+        generation); a refresh that finds an intent rolls it forward
+        if the view's generation has moved and redoes it otherwise, so
+        a crash at any step applies each delta exactly once. The whole
         pull->merge->mark->advance sequence holds the view's commit
         lock: two same-process refreshers would otherwise both pull
         the same delta and double-apply it."""
@@ -3904,6 +3908,16 @@ class TableStore:
     def _refresh_mview_locked(self, view: str) -> dict:
         spec = self.mview_spec(view)
         src, cons = spec["src"], f"__mv_{view}"
+        pending = spec.pop("pending", None)
+        if pending is not None:
+            # a refresh died after publishing its intent: its MERGE
+            # committed iff the view's generation moved past the one
+            # the intent recorded (only refreshes write a view, under
+            # this lock) — mark it applied; otherwise nothing of it is
+            # visible and this refresh redoes it
+            if os.path.basename(self._current(view)) != spec.pop("pending_view"):
+                spec["applied"] = pending
+            self._mv_write_spec(view, spec)
         # read _current(src) ONCE and pin the whole refresh to it: the
         # pull diffs cursor..cur and the cursor advances to exactly
         # cur — a source commit landing mid-refresh (the //mv lock
@@ -3912,22 +3926,25 @@ class TableStore:
         # silently skipped
         cur = os.path.basename(self._current(src))
         zero = {"inserted": 0, "updated": 0, "deleted": 0}
-        if spec.get("applied") == cur:
-            try:
-                with open(self._cursor_path(src, cons)) as fh:
-                    cursor = fh.read().strip()
-            except FileNotFoundError:
-                # cursor file lost while the applied generation still
-                # matches current: the view content is up to date, so
-                # re-pin the cursor at the applied generation instead
-                # of raising (the cursor-vacuumed analog of the reseed
-                # self-heal, without the needless recompute)
-                self._write_cursor(src, cons, cur)
-                return {**zero, "status": "replayed"}
-            if cursor != cur:
-                self._write_cursor(src, cons, cur)
-                return {**zero, "status": "replayed"}
-            return {**zero, "status": "noop"}
+        try:
+            with open(self._cursor_path(src, cons)) as fh:
+                cursor = fh.read().strip()
+        except FileNotFoundError:
+            cursor = None
+        # the spec is published before the cursor: a cursor behind the
+        # applied generation is a refresh that committed and died
+        # before advancing it — roll it forward WITHOUT re-applying. A
+        # lost cursor with the applied generation current re-pins the
+        # same way (the cursor-vacuumed analog of the reseed self-heal,
+        # without the needless recompute); with commits pending it
+        # falls to the reseed below.
+        replayed = cursor != spec["applied"] and (
+            cursor is not None or spec["applied"] == cur
+        )
+        if replayed:
+            self._write_cursor(src, cons, spec["applied"])
+        if spec["applied"] == cur:
+            return {**zero, "status": "replayed" if replayed else "noop"}
         try:
             delta = self.changes_since(
                 src, cons, spec["key_cols"], spec["compare_cols"], to_gen=cur
@@ -3945,9 +3962,9 @@ class TableStore:
             # is still pending, double-applying it next refresh)
             pinned = self._read_gen(src, os.path.join(self._dir(src), cur))
             self.replace(view, self._mv_compute(pinned, spec))
-            self._write_cursor(src, cons, cur)
             spec["applied"] = cur
             self._mv_write_spec(view, spec)
+            self._write_cursor(src, cons, cur)
             return {**zero, "status": "reseeded"}
         group_by = spec["group_by"]
         cnt = spec["count_col"]
@@ -4059,6 +4076,16 @@ class TableStore:
                 f"(s.__rec AND s.__abs_{cnt} IS NULL) OR "
                 f"((NOT s.__rec) AND (t.{cnt} + s.__dn) = 0)"
             )
+        # intent before the MERGE: a crash between its commit and the
+        # spec publish below must not re-apply the delta next refresh
+        self._mv_write_spec(
+            view,
+            {
+                **spec,
+                "pending": cur,
+                "pending_view": os.path.basename(self._current(view)),
+            },
+        )
         metrics = self.merge(
             view,
             net,

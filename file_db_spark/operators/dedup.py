@@ -21,13 +21,13 @@ oversized embedding cells are sign-bit sub-bucketed — see
 from __future__ import annotations
 
 import os
-import threading
-import weakref
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import frames
 from ..catalog import load_table
 from ..functions.text import (
     DUCKDB_BASE_HASH,
@@ -47,20 +47,6 @@ from ..functions.vectors import cosine
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
 
-
-#: Per-session spread state, weakly keyed on the SparkSession (VERDICT
-#: r10 / ADVICE: the old module dict was unbounded, keyed on a reusable
-#: id(), and collapsed all file-less frames onto one entry). Holds the
-#: kernel families that have already spread once ("seen") and the width
-#: probe results per scanned file set ("width").
-_SPREAD_STATE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-#: Guards _SPREAD_STATE and _CACHE: suite members and the x27/x36
-#: generator fan-out reach them from pool threads, and a
-#: WeakKeyDictionary's setdefault is not atomic.
-_STATE_LOCK = threading.Lock()
 
 #: Corpus size above which a narrow scan is ALWAYS spread before the
 #: text kernels, even with JIT-warm code: past this, per-row kernel
@@ -116,11 +102,14 @@ def _spread_corpus(d: DataFrame, family: str = "x3") -> DataFrame:
     spark = d.sparkSession
     dp = spark.sparkContext.defaultParallelism
     files = tuple(sorted(d.inputFiles()))
-    with _STATE_LOCK:
-        state = _SPREAD_STATE.setdefault(spark, {"seen": set(), "width": {}})
-        first = family not in state["seen"]
-        state["seen"].add(family)
-        width = state["width"].get(files) if files else None
+    # per session: the kernel families that already spread once
+    # ("seen") and the width probe results per scanned file set
+    state = frames.cached(
+        spark, None, "spread", lambda: {"seen": {}, "width": {}}, pinned=True
+    )
+    call = object()
+    first = state["seen"].setdefault(family, call) is call  # atomic claim
+    width = state["width"].get(files) if files else None
     if not first and files:
         b = _corpus_bytes(list(files))
         if b is not None and b < _SPREAD_MIN_BYTES:
@@ -132,66 +121,21 @@ def _spread_corpus(d: DataFrame, family: str = "x3") -> DataFrame:
     if width is None:
         width = d.rdd.getNumPartitions()
         if files:
-            with _STATE_LOCK:
-                state["width"][files] = width
+            state["width"][files] = width
     if width >= dp:
         return d
     return d.repartition(dp)
 
-# Derived-result cache, same pattern as filedb/fixtures.py: the x3
-# pair table and x7 component labels are deterministic functions of
-# (session, sf_dir) and feed several registry entries in one grading
-# run (x3, x7, x10, x710 suite) — re-deriving them repeats the whole
-# shingle pipeline / convergence loop for identical small results. On
-# a cluster these are materialized intermediate tables. Weakly keyed
-# on the session itself, never on a reusable id(); per session,
-# (sf_dir, name) -> frame, plus (sf_dir, "held") -> the `_held` list.
-_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+# Derived results: the x3 pair table and x7 component labels are
+# deterministic functions of (session, sf_dir) and feed several registry
+# entries in one grading run (x3, x7, x10, x710 suite) — re-deriving
+# them repeats the whole shingle pipeline / convergence loop for
+# identical small results. On a cluster these are materialized
+# intermediate tables; here they are frames.cached entries.
 
-
-def _cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    with _STATE_LOCK:
-        df = _CACHE.get(spark, {}).get((sf_dir, name))
-    if df is None:
-        df = build()
-        with _STATE_LOCK:
-            _CACHE.setdefault(spark, {})[(sf_dir, name)] = df
-    return df
-
-
-def _held(spark: SparkSession, sf_dir: str) -> list:
-    """Frames persisted inside lazily returned results: the result
-    still reads them when it executes, so its builder cannot release
-    them; clear_cache(sf_dir) releases them."""
-    with _STATE_LOCK:
-        return _CACHE.setdefault(spark, {}).setdefault((sf_dir, "held"), [])
-
-
-def _release(df: DataFrame) -> None:
-    """Free `df`'s cached blocks, or an eager localCheckpoint's RDD
-    (DataFrame.unpersist cannot reach it), once nothing reads `df`."""
-    plan = df._jdf.queryExecution().logical()
-    if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
-    else:
-        df.unpersist()
-
-
-def clear_cache(sf_dir: str | None = None) -> None:
-    """Drop cached derived tables and held intermediates (bench uses
-    this between timed runs so x3/x7 timings measure the real pipeline,
-    not a cache read)."""
-    with _STATE_LOCK:
-        dropped = [
-            entries.pop(key)
-            for entries in list(_CACHE.values())
-            for key in [k for k in entries if sf_dir is None or k[0] == sf_dir]
-        ]
-    for df in (d for v in dropped for d in (v if isinstance(v, list) else [v])):
-        try:
-            _release(df)
-        except Exception:
-            pass  # a frame of a stopped session has nothing left to free
+#: bench and tools call it between timed runs, so x3/x7 timings measure
+#: the real pipeline, not a cache read
+clear_cache = frames.clear
 
 
 def _q(name: str, oracle: str | None = None):
@@ -319,30 +263,29 @@ def x3_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The pair table is cached per (session, sf_dir) and persisted: x7,
     x10 and the x710 suite all consume it in the same grading run."""
-    return _cached(
+    return frames.cached(
         spark, sf_dir, "x3_pairs", lambda: _build_x3_pairs(spark, sf_dir).persist()
     )
 
 
 def _build_x3_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents = _spread_corpus(load_table(spark, sf_dir, "documents"), "x3")
-    return _x3_pairs_from(documents, _held(spark, sf_dir))
+    return _x3_pairs_from(documents, lambda f: frames.hold(f, sf_dir))
 
 
-def _x3_pairs_from(d: DataFrame, scratch: list | None = None) -> DataFrame:
+def _x3_pairs_from(d: DataFrame, keep: Callable[[DataFrame], DataFrame]) -> DataFrame:
     """The x3 shingle-Jaccard pair pipeline over an arbitrary (doc_id,
     text) corpus — shared by x3 (full corpus) and x36 (exact-collapsed
-    representative corpus). `scratch` collects the internally persisted
-    frames so a caller that materializes a small result can release
-    them (the v20-leak lesson)."""
-    sh = (
+    representative corpus). `keep` receives each internally persisted
+    frame (and returns it): a caller returning the lazy pairs holds
+    them, one that materializes a small result releases them (the
+    v20-leak lesson). Same contract for the x4/x5/x11 twins."""
+    sh = keep(
         d.select("doc_id", tokens(normalize_text("text")).alias("toks"))
         .filter(F.size("toks") >= 5)  # drop docs shorter than the shingle
         .select("doc_id", F.explode(word_shingles_from_tokens(F.col("toks"), 5)).alias("shingle"))
         .persist()  # referenced 3x (sizes + both join sides); see x4 note
     )
-    if scratch is not None:
-        scratch.append(sh)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     w_df = Window.partitionBy("shingle")
     capped = (
@@ -468,15 +411,14 @@ def x4_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle plus 32 integer permutations, all inside codegen.
     """
     documents = _spread_corpus(load_table(spark, sf_dir, "documents"), "x4")
-    return _x4_pairs_from(documents, _held(spark, sf_dir))
+    return _x4_pairs_from(documents, lambda f: frames.hold(f, sf_dir))
 
 
-def _x4_pairs_from(d: DataFrame, scratch: list | None = None) -> DataFrame:
+def _x4_pairs_from(d: DataFrame, keep: Callable[[DataFrame], DataFrame]) -> DataFrame:
     """The x4 MinHash+LSH pair pipeline over an arbitrary (doc_id,
     text) corpus — shared by x4 (full corpus), x30 and x36
-    (exact-collapsed representative corpora). `scratch` collects the
-    persisted signature table for caller-side release."""
-    sig = (
+    (exact-collapsed representative corpora)."""
+    sig = keep(
         d.select("doc_id", tokens(normalize_text("text")).alias("toks"))
         .select(
             "doc_id", word_shingles_from_tokens(F.col("toks"), 5).alias("shingles")
@@ -492,8 +434,6 @@ def _x4_pairs_from(d: DataFrame, scratch: list | None = None) -> DataFrame:
         # then candidate-join it" — persist is the single-process analog.
         .persist()
     )
-    if scratch is not None:
-        scratch.append(sig)
     # Band table carries ONLY (doc_id, band, key) — the candidate
     # self-join and pair-dedup shuffle 3 scalars per row, not the
     # 32-long signature arrays (those rejoin after dedup, when the pair
@@ -600,10 +540,13 @@ def x5_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: band explode + equi-join on (band, bucket); the 64 per-bit
     vote aggregations are per-row array ops inside codegen, and the
     persisted band table is 4 small ints per doc."""
-    return _x5_pairs_from(_spread_corpus(load_table(spark, sf_dir, "documents"), "x5"))
+    return _x5_pairs_from(
+        _spread_corpus(load_table(spark, sf_dir, "documents"), "x5"),
+        lambda f: frames.hold(f, sf_dir),
+    )
 
 
-def _x5_pairs_from(d: DataFrame, scratch: list | None = None) -> DataFrame:
+def _x5_pairs_from(d: DataFrame, keep: Callable[[DataFrame], DataFrame]) -> DataFrame:
     """The x5 SimHash band pipeline over an arbitrary (doc_id, text)
     corpus — shared by x5 (full corpus) and x36 (representatives)."""
     sh = (
@@ -615,7 +558,7 @@ def _x5_pairs_from(d: DataFrame, scratch: list | None = None) -> DataFrame:
         .select("doc_id", portable_simhash_bands(F.col("h")).alias("bands"))
     )
     w_bucket = Window.partitionBy("band", "bucket")
-    bands = (
+    bands = keep(
         sh.select(
             "doc_id",
             "bands",
@@ -638,8 +581,6 @@ def _x5_pairs_from(d: DataFrame, scratch: list | None = None) -> DataFrame:
         .drop("bucket_n")
         .persist()  # four 16-bit ints/doc; see x4 note — avoids 2x pipeline
     )
-    if scratch is not None:
-        scratch.append(bands)
     a = bands.alias("a")
     b = bands.alias("b")
     ham = sum(
@@ -819,7 +760,9 @@ def x7_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     The converged label table is cached per (session, sf_dir): x10 and
     the x710 suite re-read it instead of re-running the loop.
     """
-    return _cached(spark, sf_dir, "x7_labels", lambda: _build_x7_labels(spark, sf_dir))
+    return frames.cached(
+        spark, sf_dir, "x7_labels", lambda: _build_x7_labels(spark, sf_dir)
+    )
 
 
 def _propagate_min_labels(
@@ -858,7 +801,7 @@ def _propagate_min_labels(
             labels.unionByName(prop).groupBy("v").agg(F.min("lab").alias("lab"))
         ).localCheckpoint()
         new_sum = new_labels.agg(F.sum("lab")).collect()[0][0]
-        _release(labels)  # new_labels' checkpoint truncated its lineage
+        frames.release(labels)  # new_labels' checkpoint truncated its lineage
         labels = new_labels
         if new_sum == prev_sum:
             break
@@ -869,7 +812,7 @@ def _propagate_min_labels(
         # single digits; hitting the bound means the input isn't one —
         # fail loudly (at 100 TB: switch to star-contraction rounds).
         raise RuntimeError(f"{what}: label propagation did not converge in {max_rounds} rounds")
-    edges.unpersist()
+    frames.release(edges)
     return labels
 
 
@@ -879,14 +822,18 @@ def _build_x7_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
     )
     labels = _propagate_min_labels(edges, "x7")
-    _held(spark, sf_dir).append(labels)
+    frames.hold(labels, sf_dir)
     return labels.select(
         F.col("v").alias("doc_id"), F.col("lab").cast("bigint").alias("component_id")
     )
 
 
 def _star_contraction_components(
-    edges: DataFrame, what: str, max_rounds: int = 30, stats: dict | None = None
+    edges: DataFrame,
+    what: str,
+    keep: Callable[[DataFrame], DataFrame],
+    max_rounds: int = 30,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii:
@@ -910,7 +857,9 @@ def _star_contraction_components(
     - each pair of rounds is followed by canonical dedup (min-max
       normalize + distinct) so edge multiplicity can't snowball, and a
       localCheckpoint truncates lineage (the x7 lesson); convergence is
-      a 2-scalar (count, xor-ish sum) fixpoint check, 1-row collects.
+      a 2-scalar (count, xor-ish sum) fixpoint check, 1-row collects;
+      a round's checkpoint is released once the next is compared, and
+      the returned labels read the last one, which goes through `keep`.
 
     Every step is a keyed shuffle on the vertex id — no window, no
     driver-side graph state — so rounds cost the same as propagation
@@ -972,7 +921,11 @@ def _star_contraction_components(
         # signature match is necessary, not sufficient (sums can
         # collide): confirm the fixpoint with an exact set difference —
         # runs at most once in practice, on the fully contracted graph
-        if cur == prev and canon.exceptAll(prev_canon).limit(1).count() == 0:
+        converged = (
+            cur == prev and canon.exceptAll(prev_canon).limit(1).count() == 0
+        )
+        frames.release(prev_canon)
+        if converged:
             if stats is not None:
                 stats["rounds"] = rounds
             break
@@ -984,6 +937,7 @@ def _star_contraction_components(
         )
     # at the fixpoint the graph is a star forest: every edge is
     # (root, v) with root = component minimum
+    canon = keep(canon)
     sym = canon.unionByName(canon.select(F.col("b").alias("a"), F.col("a").alias("b")))
     return (
         sym.groupBy("a")
@@ -1006,7 +960,9 @@ def x16_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")).unionByName(
         pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
     )
-    labels = _star_contraction_components(edges, "x16")
+    labels = _star_contraction_components(
+        edges, "x16", lambda f: frames.hold(f, sf_dir)
+    )
     return labels.select(
         F.col("v").alias("doc_id"), F.col("lab").cast("bigint").alias("component_id")
     )
@@ -1063,6 +1019,7 @@ def x9_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = staged.select(
         "doc_id", "bucket", word_shingles_from_tokens(F.col("toks"), 4).alias("shingles")
     ).persist()  # referenced by BOTH the test-gram set and the train probe
+    frames.hold(sh, sf_dir)
     test_grams = (
         sh.where(F.col("bucket") >= 950)
         .select(F.explode("shingles").alias("g"))
@@ -1194,16 +1151,17 @@ def x11_winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~|doc|/W values so the exploded table is a fraction of the k-gram
     count. One shuffle for the cap window (reused by the join), one
     pair aggregate."""
-    return _x11_pairs_from(_spread_corpus(load_table(spark, sf_dir, "documents"), "x11"))
+    return _x11_pairs_from(
+        _spread_corpus(load_table(spark, sf_dir, "documents"), "x11"),
+        lambda f: frames.hold(f, sf_dir),
+    )
 
 
-def _x11_pairs_from(d: DataFrame, scratch: list | None = None) -> DataFrame:
+def _x11_pairs_from(d: DataFrame, keep: Callable[[DataFrame], DataFrame]) -> DataFrame:
     """The x11 winnowing-minima pair pipeline over an arbitrary
     (doc_id, text) corpus — shared by x11 (full corpus) and x36
     (representatives)."""
-    fp = _winnow_minima_from(d).persist()
-    if scratch is not None:
-        scratch.append(fp)
+    fp = keep(_winnow_minima_from(d).persist())
     ex = fp.select("doc_id", F.explode("minima").alias("m"))
     w_m = Window.partitionBy("m")
     capped = (
@@ -1306,6 +1264,7 @@ def x13_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("chunk_hash"),
     ).persist()
+    frames.hold(chunks, sf_dir)
     cf = chunks.groupBy("chunk_hash").agg(
         F.countDistinct("doc_id").alias("chunk_df")
     )
@@ -1381,7 +1340,7 @@ def x14_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(F.col("vec_a").alias("a"), F.col("vec_b").alias("b")).unionByName(
         pairs.select(F.col("vec_b").alias("a"), F.col("vec_a").alias("b"))
     )
-    labels = _propagate_min_labels(edges, "x14")
+    labels = frames.hold(_propagate_min_labels(edges, "x14"), sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
     cluster = F.coalesce(F.col("lab"), F.col("vec_id"))
     return (
@@ -1473,6 +1432,7 @@ def x15_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = staged.select(
         "doc_id", "bucket", word_shingles_from_tokens(F.col("toks"), 4).alias("shingles")
     ).persist()  # both splits derive from it (the x9 pattern)
+    frames.hold(sh, sf_dir)
 
     def positions(b):
         return F.array(
@@ -1587,6 +1547,7 @@ def x17_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("doc_b").alias("v"))
     )
     deg = ends.groupBy("v").agg(F.count("*").cast("bigint").alias("d")).persist()
+    frames.hold(deg, sf_dir)
     e = (
         pairs.join(deg.select(F.col("v").alias("a"), F.col("d").alias("da")),
                    F.col("doc_a") == F.col("a"))
@@ -1606,6 +1567,7 @@ def x17_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(lower_first, F.col("doc_b")).otherwise(F.col("doc_a")).alias("dst"),
         F.when(lower_first, F.col("db")).otherwise(F.col("da")).alias("dst_d"),
     ).persist()
+    frames.hold(de, sf_dir)
     e1 = de.select(
         "src", "src_d", F.col("dst").alias("y"), F.col("dst_d").alias("y_d")
     )
@@ -1705,6 +1667,7 @@ def x18_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
+    frames.hold(staged, sf_dir)
     sizes = staged.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     w_df = Window.partitionBy("shingle")
     capped = (
@@ -1842,7 +1805,7 @@ def x19_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # clear_cache releases it. Each rank has one consumer, the next
     # round, so ranks stay lazy: materializing one saves no recompute.
     ed = e.join(deg, "src").select("src", "dst", "d").persist()
-    _held(spark, sf_dir).append(ed)
+    frames.hold(ed, sf_dir)
     nn = deg.select(F.count("*").cast("bigint").alias("n"))
     rank = (
         deg.select(F.col("src").alias("v"))
@@ -1953,6 +1916,7 @@ def x20_prefix_ssjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
+    frames.hold(sh, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("n_sh"))
     df_tab = sh.groupBy("shingle").agg(F.count("*").cast("bigint").alias("df"))
     ranked = (
@@ -2460,6 +2424,7 @@ def x24_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("doc_id") % 10 == 0
     corpus_keys = grams.filter(~is_new).select("g").distinct()
     newg = grams.filter(is_new).persist()
+    frames.hold(newg, sf_dir)
     batch_dup = (
         newg.groupBy("g").count().filter(F.col("count") >= 2).select("g")
     )
@@ -2614,6 +2579,7 @@ def x25_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_jaccard",
         "est_jaccard",
     ).persist()
+    frames.hold(joined, sf_dir)
     conf = joined.agg(
         F.sum((F.col("status") == "tp").cast("int")).cast("bigint").alias("tp"),
         F.sum((F.col("status") == "fp").cast("int")).cast("bigint").alias("fp"),
@@ -2892,11 +2858,12 @@ def x27_fused_dedup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _one(item):
         k, fn = item
         spark.sparkContext.setJobDescription(f"x27: {k} pair generator")
-        return k, (
+        return k, frames.hold(
             fn(spark, sf_dir)
             .select("doc_a", "doc_b")
             .withColumn("src", F.lit(k))
-            .localCheckpoint()
+            .localCheckpoint(),
+            sf_dir,
         )
 
     from concurrent.futures import ThreadPoolExecutor
@@ -2916,7 +2883,7 @@ def x27_fused_dedup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fixpoint's shuffled state is O(pair endpoints) — thousands of
     # rows — and AQE coalesces its per-round shuffles to match; the
     # corpus-scale generator work already happened above
-    labels = _propagate_min_labels(edges, "x27").select(
+    labels = frames.hold(_propagate_min_labels(edges, "x27"), sf_dir).select(
         F.col("v").alias("doc_id"),
         F.col("lab").cast("bigint").alias("component_id"),
     )
@@ -3014,6 +2981,7 @@ def x28_lsh_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a 5-row result. The planner is how (bands, rows) gets re-tuned
     when the corpus' similarity mix drifts — measured, not guessed."""
     pairs = x3_ngram_jaccard(spark, sf_dir).select("jaccard").persist()
+    frames.hold(pairs, sf_dir)
     out = None
     for b, r in X28_CONFIGS:
         jstar = (1.0 - 0.5 ** (1.0 / b)) ** (1.0 / r)
@@ -3101,6 +3069,7 @@ def x29_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
+    frames.hold(sh, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     w_df = Window.partitionBy("shingle")
     capped = (
@@ -3224,11 +3193,13 @@ def x30_collapsed_dedup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep_docs = d.join(
         rep_groups.select(F.col("rep_id").alias("doc_id")), "doc_id"
     ).select("doc_id", "text")
-    pairs = _x4_pairs_from(rep_docs).select("doc_a", "doc_b")
+    pairs = _x4_pairs_from(rep_docs, lambda f: frames.hold(f, sf_dir)).select(
+        "doc_a", "doc_b"
+    )
     edges = pairs.select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     ).unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
-    labels = _propagate_min_labels(edges, "x30").select(
+    labels = frames.hold(_propagate_min_labels(edges, "x30"), sf_dir).select(
         F.col("v").alias("rep_id"), F.col("lab").cast("bigint").alias("component_id")
     )
     return members.join(labels, "rep_id", "left").select(
@@ -3308,11 +3279,13 @@ def x31_cross_shard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep_docs = d.join(
         rep_groups.select(F.col("rep_id").alias("doc_id")), "doc_id"
     ).select("doc_id", "text")
-    pairs = _x4_pairs_from(rep_docs).select("doc_a", "doc_b")
+    pairs = _x4_pairs_from(rep_docs, lambda f: frames.hold(f, sf_dir)).select(
+        "doc_a", "doc_b"
+    )
     edges = pairs.select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     ).unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
-    labels = _propagate_min_labels(edges, "x31").select(
+    labels = frames.hold(_propagate_min_labels(edges, "x31"), sf_dir).select(
         F.col("v").alias("rep_id"), F.col("lab").cast("bigint").alias("component_id")
     )
     return members.join(labels, "rep_id", "left").select(
@@ -3489,7 +3462,7 @@ def _fuzzy_screen(docs: DataFrame) -> DataFrame:
         # released immediately (the v20-leak lesson from round 5)
         .localCheckpoint(eager=True)
     )
-    sig.unpersist()
+    frames.release(sig)
     return out
 
 
@@ -3593,7 +3566,9 @@ def x34_decontaminate_representatives(
     corpus = rep_docs.unionByName(
         test.select("doc_id", F.lit(True).alias("is_test"), "text")
     )
-    rolled = _fuzzy_screen(corpus).withColumnRenamed("train_doc", "rep_id")
+    rolled = frames.hold(_fuzzy_screen(corpus), sf_dir).withColumnRenamed(
+        "train_doc", "rep_id"
+    )
     return members.join(rolled, "rep_id").select(
         F.col("doc_id").alias("train_doc"),
         F.col("rep_id").cast("bigint").alias("rep_id"),
@@ -3735,7 +3710,6 @@ def x36_collapsed_provenance_graph(
         .repartition(spark.sparkContext.defaultParallelism)
         .localCheckpoint()
     )
-    scratch: list = []
     gens = {
         "x3": _x3_pairs_from,
         "x4": _x4_pairs_from,
@@ -3756,15 +3730,14 @@ def x36_collapsed_provenance_graph(
         k, fn = item
         sc = rep_docs.sparkSession.sparkContext
         sc.setJobDescription(f"x36: {k} pair generator")
-        local: list = []
+        internals: list = []
         part = (
-            fn(rep_docs, local)
+            fn(rep_docs, lambda f: internals.append(f) or f)
             .select("doc_a", "doc_b")
             .withColumn("src", F.lit(k))
             .localCheckpoint()
         )
-        for fr in local:  # generator internals are dead once pairs exist
-            fr.unpersist()
+        frames.release(*internals)  # dead once the pairs exist
         return k, part
 
     from concurrent.futures import ThreadPoolExecutor
@@ -3787,7 +3760,8 @@ def x36_collapsed_provenance_graph(
     ).unionByName(
         pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
     )
-    labels = _propagate_min_labels(edges, "x36").select(
+    raw_labels = _propagate_min_labels(edges, "x36")
+    labels = raw_labels.select(
         F.col("v").alias("rep_id"),
         F.col("lab").cast("bigint").alias("component_id"),
     )
@@ -3829,6 +3803,5 @@ def x36_collapsed_provenance_graph(
         )
         .localCheckpoint(eager=True)
     )
-    for fr in scratch:
-        fr.unpersist()
+    frames.release(rep_groups, rep_docs, *parts.values(), raw_labels, prov)
     return out

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import frames
 from ..catalog import load_table
 
 QUERIES: dict = {}
@@ -648,6 +649,7 @@ def e13_hll_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     day = F.floor(F.col("ts").cast("timestamp").cast("long") / 86400).cast("bigint")
     du = e.select(day.alias("day"), "user_id").distinct().persist()
+    frames.hold(du, sf_dir)
     hashed = du.select(
         "day", portable_hash60(F.col("user_id").cast("string")).alias("h")
     )
@@ -668,6 +670,7 @@ def e13_hll_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("rho").alias("m_j"))
         .persist()
     )
+    frames.hold(regd, sf_dir)
     days = du.select("day").distinct()
 
     def _per(reg: DataFrame) -> DataFrame:
@@ -896,6 +899,7 @@ def e15_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()  # anchor + cutoffs + final scoring all consume it
     )
+    frames.hold(per_user, sf_dir)
     anchor = per_user.agg(F.max("last_ts").alias("max_ts"))
     rfm = per_user.crossJoin(F.broadcast(anchor)).select(
         "user_id",
@@ -1338,6 +1342,7 @@ def e19_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value"),
     ).persist()  # spine extent + types + the join all read it
+    frames.hold(hourly, sf_dir)
     ext = hourly.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
     types = hourly.select("event_type").distinct()
     spine = (
@@ -1567,6 +1572,7 @@ def e22_seasonal_skill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("value").cast("decimal(12,2)")).alias("v"))
         .persist()
     )
+    frames.hold(hourly, sf_dir)
     a, s, p = hourly.alias("a"), hourly.alias("s"), hourly.alias("p")
     day = F.expr("INTERVAL 24 HOURS")
     hr = F.expr("INTERVAL 1 HOURS")
@@ -1592,6 +1598,7 @@ def e22_seasonal_skill(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
+    frames.hold(joined, sf_dir)
     h = joined.select(
         F.lit("h").alias("part"),
         "hour",

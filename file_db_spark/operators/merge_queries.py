@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import frames
 from ..filedb import fixtures, merge
 from .filedb_catalog import _BP
 from ..localframe import local_df
@@ -235,6 +236,7 @@ def g1_merge_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     crawled = local_df(spark, [("/corpus",), ("C:\\corpus",)], "dir_path string")
     dm = merge.merge_directories(dirs, staged_dirs, crawled, NOW)
+    frames.hold(dm.scratch, sf_dir)  # the lazy result reads the change slice
 
     src0 = dirs.where(
         F.col("dir_path").isin("/corpus/src0", "C:\\corpus\\src0")
@@ -273,6 +275,7 @@ def g1_merge_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hash_control = scoped.where(fid % 9 == 0).select(fid.alias("file_id"))
     fm = merge.merge_files(file, staged_files, src0, hash_control, NOW)
+    frames.hold(fm.scratch, sf_dir)  # the lazy result reads the change slice
 
     out_dir_state = dm.directory.select(
         F.lit("dir_state").alias("part"),
@@ -2361,6 +2364,7 @@ def g24_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(meta_rec2)
         .localCheckpoint(eager=True)
     )
+    frames.release(mid_f, mid_d)
     shutil.rmtree(root, ignore_errors=True)
     return out
 
@@ -3826,6 +3830,7 @@ def g10_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(backlog)
         .persist()
     )
+    frames.hold(checks, sf_dir)
     names = local_df(spark, 
         [(c,) for c in (
             "orphan_file", "dangling_hash", "missing_parent",
@@ -4362,7 +4367,9 @@ def g14_stats_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_df = f.where(F.col("id") % 10 != 0)
     delta_df = f.where(F.col("id") % 10 == 0)
     rb = _g14_registers(base_df).persist()
+    frames.hold(rb, sf_dir)
     rd = _g14_registers(delta_df).persist()
+    frames.hold(rd, sf_dir)
     merged_regs = (
         rb.unionByName(rd).groupBy("bucket").agg(F.max("m_j").alias("m_j"))
     )
@@ -4988,7 +4995,9 @@ def g3456_control_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the pool (guide §2.6; measured ~4.4s of post-pool serial
         # driver work before this)
         raw = _timing.timed_member("g3456_control_suite", k, fn, spark, sf_dir)
-        return projs[k](raw).localCheckpoint(eager=True)
+        part = projs[k](raw).localCheckpoint(eager=True)
+        frames.release(raw)
+        return frames.hold(part, sf_dir)  # the union reads it lazily
 
     with ThreadPoolExecutor(
         max_workers=int(os.environ.get("SPARK_GRAFT_SUITE_WORKERS", "8"))

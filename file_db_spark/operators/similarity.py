@@ -11,11 +11,14 @@
 
 # NOTE: no `from __future__ import annotations` here — postponed
 # (stringified) annotations break pandas_udf type-hint inference.
+from typing import Callable
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import frames
 from ..catalog import load_table
 from ..functions.vectors import cosine, dot, unit_normalize
 
@@ -574,7 +577,7 @@ def v6_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the shared Lloyd loop (see _lloyd_assign below; v9's index-add
     # trains on a subset through the same code path)
-    assigned = _lloyd_assign(pts, KMEANS_ITERS)
+    assigned = _lloyd_assign(pts, KMEANS_ITERS, lambda f: frames.hold(f, sf_dir))
     return assigned.select(
         "vec_id",
         F.col("cell").cast("bigint").alias("cell"),
@@ -683,7 +686,7 @@ def x32_prototype_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>").alias("emb"),
         (F.col("vec_id") % KMEANS_K).alias("cell"),
     )
-    assigned = _lloyd_assign(pts, KMEANS_ITERS)
+    assigned = _lloyd_assign(pts, KMEANS_ITERS, lambda f: frames.hold(f, sf_dir))
     w = Window.partitionBy("cell").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
     ranked = (
         assigned.select("vec_id", "cell", "cos")
@@ -813,6 +816,7 @@ def v7_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the subspace-slice subtree doubles per round (x7's bounded-lineage
     # lesson applied to a fixed-depth loop)
     assigned = sub.persist()
+    frames.hold(assigned, sf_dir)
     cents = None
     for _ in range(PQ_ITERS):
         cents = _pq_centroids(assigned).withColumnRenamed("cell", "c_cell")
@@ -841,6 +845,7 @@ def v7_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "m", F.col("best.se").alias("se"), F.col("best.cell").alias("cell"))
             .persist()
         )
+        frames.hold(assigned, sf_dir)
     # codes: one row per vector, PQ_M one-byte columns (fixed pivot)
     codes = assigned.groupBy("vec_id").agg(
         *[
@@ -1064,6 +1069,7 @@ def _lsh_scored_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("bucket_n")
         .persist()
     )
+    frames.hold(capped, sf_dir)
     l = capped.alias("l")
     r = capped.alias("r")
     pairs = (
@@ -1089,7 +1095,7 @@ def _lsh_scored_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos_sim"),
         )
     )
-    return (
+    return frames.hold(
         scored.select(
             F.col("a").alias("vec_id"), F.col("b").alias("neighbor_id"), "cos_sim"
         )
@@ -1098,7 +1104,8 @@ def _lsh_scored_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("b").alias("vec_id"), F.col("a").alias("neighbor_id"), "cos_sim"
             )
         )
-        .persist()
+        .persist(),
+        sf_dir,
     )
 
 
@@ -1203,11 +1210,17 @@ ORACLES["v8_knn_graph"] = _v8_oracle()
 
 
 def _lloyd_assign(
-    pts: DataFrame, iters: int, eager_checkpoint: bool = False
+    pts: DataFrame,
+    iters: int,
+    keep: Callable[[DataFrame], DataFrame],
+    eager_checkpoint: bool = False,
 ) -> DataFrame:
     """The v6 Lloyd loop (broadcast k x dim centroids -> map-only
     scoring -> keyed argmax -> partial-agg means), factored so training
-    can run on any point set. Returns (vec_id, emb, cell, cos).
+    can run on any point set. Returns (vec_id, emb, cell, cos). Every
+    round's frozen assignment goes through `keep` (which returns it):
+    a caller returning a lazy plan holds them, one that materializes
+    its artifacts releases them.
 
     eager_checkpoint=True freezes each round as an eager
     localCheckpoint (guide §3.3/§5, the x36/v15 lesson) — worth it
@@ -1217,9 +1230,9 @@ def _lloyd_assign(
     (v6/v9/x32: one aggregate after the loop) the extra materialization
     jobs cost more than the re-planning they save (v6 measured 0.47 →
     1.69 s with checkpoints), so the default stays a lazy persist."""
-    freeze = (lambda df: df.localCheckpoint()) if eager_checkpoint else (
-        lambda df: df.persist()
-    )
+    def freeze(df: DataFrame) -> DataFrame:
+        return keep(df.localCheckpoint() if eager_checkpoint else df.persist())
+
     assigned = freeze(pts)
     for _ in range(iters):
         cents = _km_centroids(assigned).withColumnRenamed("cell", "c_cell")
@@ -1283,8 +1296,13 @@ def v9_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>").alias("emb"),
         (F.col("vec_id") % KMEANS_K).alias("cell"),
     )
-    base_assigned = _lloyd_assign(pts.where(F.col("vec_id") % 10 != 0), KMEANS_ITERS)
+    base_assigned = _lloyd_assign(
+        pts.where(F.col("vec_id") % 10 != 0),
+        KMEANS_ITERS,
+        lambda f: frames.hold(f, sf_dir),
+    )
     cents = _km_centroids(base_assigned).withColumnRenamed("cell", "c_cell").persist()
+    frames.hold(cents, sf_dir)
     new_scored = (
         pts.where(F.col("vec_id") % 10 == 0)
         .select("vec_id", "emb")
@@ -1569,6 +1587,7 @@ def v10_kmeanspp_init(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         centers = centers.unionByName(picked)
     cand = centers.persist()
+    frames.hold(cand, sf_dir)
     scored = pts.crossJoin(F.broadcast(cand.select("cid", "cemb"))).select(
         "vec_id", "cid", _d2(F.col("emb"), F.col("cemb")).alias("d2")
     )
@@ -1591,6 +1610,7 @@ def v10_kmeanspp_init(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
+    frames.hold(wt, sf_dir)
     chosen = (
         wt.orderBy(F.desc("weight"), F.asc("cid"))
         .limit(1)
@@ -1710,6 +1730,7 @@ def v11_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeats (each strictly improving) — this entry pins one round so
     the oracle stays a generated CTE chain."""
     g = v8_knn_graph(spark, sf_dir).persist()
+    frames.hold(g, sf_dir)
     und = (
         g.select(F.col("vec_id").alias("u"), F.col("neighbor_id").alias("w"))
         .unionByName(
@@ -2072,6 +2093,7 @@ def v14_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the graph (sparse LSH tail) return no rows, as in v8; raise
     KNN_TABLES for recall."""
     g = v8_knn_graph(spark, sf_dir).select("vec_id", "neighbor_id").persist()
+    frames.hold(g, sf_dir)
     hop1 = g.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("neighbor_id").alias("cand")
     )
@@ -2261,7 +2283,7 @@ def v15_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inside every later round AND again in the union. A pick is Q
     # rows, so each checkpoint is one tiny job; the returned plan is a
     # union over K leaves and the build caches can be released.
-    picks = [sel.localCheckpoint()]
+    picks = [frames.hold(sel.localCheckpoint(), sf_dir)]
     for r in range(2, MMR_K + 1):
         prev = picks[0].select("query_id", "nid")
         for p_df in picks[1:]:
@@ -2299,12 +2321,11 @@ def v15_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(r).cast("bigint").alias("round"),
             )
         )
-        picks.append(pick.localCheckpoint())
+        picks.append(frames.hold(pick.localCheckpoint(), sf_dir))
     # picks are materialized leaves now — the Q×C candidate/pair
     # caches are dead weight; release them instead of pinning them for
     # the rest of the session
-    cand.unpersist()
-    pairs.unpersist()
+    frames.release(cand, pairs)
     out = picks[0]
     for p_df in picks[1:]:
         out = out.unionByName(p_df)
@@ -2334,7 +2355,7 @@ def _v16_train(spark: SparkSession, sf_dir: str):
     residuals, PQ Lloyd loop over residual subspaces, corpus encoding.
     Returns (cents, pcents, codes, cached) — the three index artifacts
     plus every intermediate this build persist()ed, so a caller that
-    MATERIALIZES the artifacts (ensure_index's writes) can unpersist
+    MATERIALIZES the artifacts (ensure_index's writes) can release
     them and not leak cached partitions across a bench/probe session
     (ADVICE r5). Split from serving so the one-time build can be
     persisted (the 100 TB posture: train once, store codebooks +
@@ -2345,8 +2366,14 @@ def _v16_train(spark: SparkSession, sf_dir: str):
         F.col("embedding").cast("array<double>").alias("emb"),
         (F.col("vec_id") % KMEANS_K).alias("cell"),
     )
-    assigned = _lloyd_assign(pts, KMEANS_ITERS, eager_checkpoint=True)
-    cents = _km_centroids(assigned).localCheckpoint()  # frozen coarse codebook
+    cached: list = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        cached.append(df)
+        return df
+
+    assigned = _lloyd_assign(pts, KMEANS_ITERS, keep, eager_checkpoint=True)
+    cents = keep(_km_centroids(assigned).localCheckpoint())  # frozen coarse codebook
     res = (
         assigned.select("vec_id", "emb", "cell")
         .join(F.broadcast(cents), "cell")
@@ -2370,7 +2397,7 @@ def _v16_train(spark: SparkSession, sf_dir: str):
         ((F.col("vec_id") + F.col("m")) % PQ_K).alias("cell"),
     )
     passigned = rsub.localCheckpoint()
-    cached = [cents, res, passigned]
+    cached += [res, passigned]
     pcents = None
     for _ in range(PQ_ITERS):
         pcents = _pq_centroids(passigned).withColumnRenamed("cell", "c_cell")
@@ -2532,10 +2559,10 @@ def v16_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     + 3 adds per candidate, no float dot against raw vectors at all;
     one per-query top-k window. Training is the v6/v7 fixed-depth
     broadcast loops, all per-round state persisted. In production you
-    train ONCE and persist — that path is v16_serve below. The
-    training caches stay pinned here because the returned plan reads
-    them lazily — that's inherent to the one-shot train+serve shape;
-    the persisted-artifact path (ensure_index) unpersists after its
+    train ONCE and persist — that path is v16_serve below. Here the
+    three frozen artifacts are held until frames.clear (the returned
+    plan reads them lazily) and the training caches are released; the
+    persisted-artifact path (ensure_index) releases them after its
     writes."""
     cents, pcents, codes, cached = _v16_train(spark, sf_dir)
     # Freeze the three artifacts as eager localCheckpoints — the
@@ -2548,15 +2575,10 @@ def v16_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the serve query plans over (codes ⋈ tiny broadcasts) only. The
     # training caches are dead once the artifacts are materialized, so
     # they are released here instead of staying pinned for the session.
-    cents = cents.localCheckpoint()
-    pcents = pcents.localCheckpoint()
-    codes = codes.localCheckpoint()
-    # releases the PERSISTED entries in `cached`; checkpointed rounds
-    # in the list are not unpersistable via Dataset.unpersist (ADVICE
-    # r10) — their blocks free via ContextCleaner on the session's
-    # periodic GC (session.py)
-    for df in cached:
-        df.unpersist()
+    cents, pcents, codes = (
+        frames.hold(df.localCheckpoint(), sf_dir) for df in (cents, pcents, codes)
+    )
+    frames.release(*cached)
     return _v16_serve_plan(spark, sf_dir, cents, pcents, codes)
 
 
@@ -2629,12 +2651,9 @@ def v16_ensure_index(spark: SparkSession, sf_dir: str) -> str:
         cents.write.mode("overwrite").parquet(os.path.join(path, "cents"))
         pcents.write.mode("overwrite").parquet(os.path.join(path, "pcents"))
         codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-        # artifacts are on disk now — drop the persisted training
-        # caches so a session running many v16/v20 entries doesn't
-        # accumulate them (checkpointed entries free via the periodic
-        # GC instead; Dataset.unpersist cannot release them)
-        for df in cached:
-            df.unpersist()
+        # artifacts are on disk now — drop the training caches so a
+        # session running many v16/v20 entries doesn't accumulate them
+        frames.release(*cached)
     return path
 
 
@@ -2851,7 +2870,7 @@ def _v20_residual_sub(enc: DataFrame, cents: DataFrame, cached: list | None = No
     centroid, plus the per-subspace slices (with the PQ training seed
     cell, used only when this feeds the Lloyd loop). The persisted
     residual frame is appended to `cached` (when given) so the caller
-    can unpersist it once its downstream plans have materialized."""
+    can release it once its downstream plans have materialized."""
     res = (
         enc.join(F.broadcast(cents), "cell")
         .select(
@@ -2930,7 +2949,7 @@ def _v20_train(spark: SparkSession, sf_dir: str):
     PQ Lloyd over base residuals (computed against the FROZEN coarse
     book, so training residuals equal encode-time residuals) -> frozen
     subspace codebook. Returns (cents, pcents, cached) — cached being
-    every persisted intermediate, for the caller to unpersist once the
+    every persisted intermediate, for the caller to release once the
     artifacts are materialized (ADVICE r5)."""
     e = load_table(spark, sf_dir, "embeddings")
     pts = e.select(
@@ -2939,10 +2958,17 @@ def _v20_train(spark: SparkSession, sf_dir: str):
         (F.col("vec_id") % KMEANS_K).alias("cell"),
     )
     base = pts.where(F.col("vec_id") % 10 != 0)
-    cents = _km_centroids(
-        _lloyd_assign(base, KMEANS_ITERS, eager_checkpoint=True)
-    ).localCheckpoint()
-    cached: list = [cents]
+    cached: list = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        cached.append(df)
+        return df
+
+    cents = keep(
+        _km_centroids(
+            _lloyd_assign(base, KMEANS_ITERS, keep, eager_checkpoint=True)
+        ).localCheckpoint()
+    )
     _res, rsub = _v20_residual_sub(
         _v16_coarse_encode(base, cents), cents, cached
     )
@@ -3018,8 +3044,7 @@ def v20_ensure_index(spark: SparkSession, sf_dir: str) -> str:
         pcents.write.mode("overwrite").parquet(os.path.join(path, "pcents"))
         codes.write.mode("overwrite").parquet(os.path.join(path, "codes_base"))
         # artifacts are on disk — release every training/encode cache
-        for df in cached:
-            df.unpersist()
+        frames.release(*cached)
     return path
 
 
@@ -3058,8 +3083,7 @@ def v20_pq_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         _v20_encode(delta, cents, pcents, cached).write.mode(
             "overwrite"
         ).parquet(delta_path)
-        for df in cached:
-            df.unpersist()
+        frames.release(*cached)
     codes = spark.read.parquet(os.path.join(path, "codes_base"), delta_path)
     return _v16_serve_plan(spark, sf_dir, cents, pcents, codes)
 
@@ -3288,6 +3312,7 @@ def v17_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster the per-method result tables are persisted artifacts and
     this query is a metadata-sized report over them."""
     truth = v1_knn_bruteforce(spark, sf_dir).select("query_id", "neighbor_id").persist()
+    frames.hold(truth, sf_dir)
     out = None
     for name in _V17_METHODS:
         tag = name.split("_")[0]
@@ -3316,6 +3341,7 @@ def v17_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = perq if out is None else out.unionByName(perq)
     out = out.persist()
+    frames.hold(out, sf_dir)
     # summary denominators = summed truth-row counts (see oracle note)
     summary = out.groupBy("method").agg(
         F.sum("n_truth").cast("bigint").alias("n_truth"),
@@ -3638,7 +3664,7 @@ def v19_retrieval_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # eager per-pick localCheckpoints: same plan-truncation rationale
     # as v15 (the union otherwise nests ~2^K copies of each round)
-    picks = [sel.localCheckpoint()]
+    picks = [frames.hold(sel.localCheckpoint(), sf_dir)]
     for r in range(2, V19_K + 1):
         prev = picks[0].select("query_id", "nid")
         for p_df in picks[1:]:
@@ -3664,12 +3690,11 @@ def v19_retrieval_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(r).cast("bigint").alias("round"),
             )
         )
-        picks.append(pick.localCheckpoint())
+        picks.append(frames.hold(pick.localCheckpoint(), sf_dir))
     # picks are materialized leaves now — the Q×C candidate/pair
     # caches are dead weight; release them instead of pinning them for
     # the rest of the session
-    cand.unpersist()
-    pairs.unpersist()
+    frames.release(cand, pairs)
     out = picks[0]
     for p_df in picks[1:]:
         out = out.unionByName(p_df)

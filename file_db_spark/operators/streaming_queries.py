@@ -16,6 +16,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import frames
 from ..filedb.store import publish, publish_bytes
 from ..streaming import events_stream as es
 from ..localframe import local_df
@@ -262,7 +263,9 @@ def s6_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = paired.select("new_doc_id", "dup_of", est.alias("est_jaccard")).where(
         est >= 0.5
     )
-    return _drain(out, "s6", "append")
+    out = _drain(out, "s6", "append")  # the memory sink holds the result
+    frames.release(base_sig)
+    return out
 
 
 QUERIES["s6_stream_neardup"] = s6_stream_neardup
@@ -346,7 +349,7 @@ def s7_stream_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 merged = b
             _swap_in(merged, data_dir, batch_id)
         finally:
-            b.unpersist()
+            frames.release(b)
 
     with es.stream_shuffle(spark):
         q = (
@@ -1235,7 +1238,7 @@ def s15_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             ver = int(b.select(F.max("wave")).first()[0])
             store.merge_scd2("dim", b.drop("wave"), ["id"], tracked, ver)
         finally:
-            b.unpersist()
+            frames.release(b)
         store.set_txn_version("s15_scd2", batch_id)
 
     stream = (
@@ -1394,7 +1397,7 @@ def s16_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
             last_metrics.update(m)
             last_metrics["_wave"] = ver
         finally:
-            b.unpersist()
+            frames.release(b)
         store.set_txn_version("s16_gate", batch_id)
 
     import pyspark.sql.types as T
@@ -1529,7 +1532,7 @@ def s17_stream_row_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
             else:
                 store.append("dim", b.drop("wave"))
         finally:
-            b.unpersist()
+            frames.release(b)
         store.set_txn_version("s17_rowdel", batch_id)
 
     stream_schema = T.StructType(
@@ -1809,7 +1812,7 @@ def s19_stream_cdc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 )
         finally:
-            b.unpersist()
+            frames.release(b)
         store.set_txn_version("s19_cdc", batch_id)
 
     stream_schema = T.StructType(
@@ -1846,6 +1849,7 @@ def s19_stream_cdc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(meta)
         .localCheckpoint(eager=True)
     )
+    frames.release(*mid_state)
     shutil.rmtree(root, ignore_errors=True)
     return out
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import frames
 from ..catalog import load_table
 from ..functions.text import BPE_TOKEN_RE, bpe_token_count, normalize_text, tokens
 from . import events, multimodal, relational, similarity, streaming_queries, textops
@@ -877,7 +878,9 @@ def dq2_split_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sn().alias("s1"),
         F.col("alloc_tokens").alias("v1"),
     )
-    d47 = textops.d47_shard_export_sink(spark, sf_dir).select(
+    # d47 returns its eagerly checkpointed result; this suite reads it
+    # lazily, so it is held until frames.clear
+    d47 = frames.hold(textops.d47_shard_export_sink(spark, sf_dir), sf_dir).select(
         F.concat(F.lit("d47_"), F.col("part")).alias("part"),
         F.col("k1").alias("doc_id"),
         _sn().alias("source"),
@@ -1294,7 +1297,8 @@ def dq4_corpus_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("fertility").alias("v1"),
         F.col("chars_per_token").alias("v2"),
     )
-    d46 = t.d46_pretrain_pipeline(spark, sf_dir).select(
+    # d46 returns its eagerly checkpointed result; read lazily here
+    d46 = frames.hold(t.d46_pretrain_pipeline(spark, sf_dir), sf_dir).select(
         F.lit("pipeline").alias("report"),
         F.col("part").alias("k1"),
         F.col("key").alias("k2"),
@@ -2387,7 +2391,8 @@ def _run_stream_suite(
             )
             for k, fn in member_fns.items()
         }
-        raw = {k: f.result() for k, f in futures.items()}
+        # members return eager checkpoints the union reads lazily
+        raw = {k: frames.hold(f.result(), sf_dir) for k, f in futures.items()}
     parts = [_STREAM_PROJ[k](raw[k]) for k in member_fns]
     out = parts[0]
     for p in parts[1:]:
@@ -2893,7 +2898,8 @@ def x915_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_bloom_hits").alias("n3"),
         _dn().alias("v1"),
     )
-    x33 = dedup.x33_fuzzy_contamination(spark, sf_dir).select(
+    # x33 returns its eagerly checkpointed result; read lazily here
+    x33 = frames.hold(dedup.x33_fuzzy_contamination(spark, sf_dir), sf_dir).select(
         F.lit("x33").alias("member"),
         F.col("train_doc").alias("doc_id"),
         F.col("n_test_matches").alias("n1"),

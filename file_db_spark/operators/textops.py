@@ -5,15 +5,13 @@ Column expressions (JVM-side) — the 100 TB path has zero Python in it.
 
 from __future__ import annotations
 
-import weakref
-
-from ..localframe import local_df
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import frames
 from ..catalog import load_table
+from ..localframe import local_df
 from ..functions.windows import bounded_frame_window, bounded_rank_window
 from ..functions.text import (
     BPE_TOKEN_RE,
@@ -1253,7 +1251,9 @@ def d22_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist it — the distinct-term table is orders of magnitude
     # smaller than the corpus (the x4 signature-table pattern); without
     # it each branch would re-scan and re-shuffle the full corpus.
-    vocab = tok.groupBy("term").agg(F.count("*").alias("true_count")).persist()
+    vocab = frames.hold(
+        tok.groupBy("term").agg(F.count("*").alias("true_count")).persist(), sf_dir
+    )
     hashed = vocab.select(
         "true_count", portable_base_hash(F.col("term")).alias("b")
     )
@@ -1361,8 +1361,9 @@ def d23_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "source", F.explode(tokens(normalize_text("text"))).alias("term")
     )
-    src_cnt = (
-        tok.groupBy("source", "term").agg(F.count("*").alias("c_st")).persist()
+    src_cnt = frames.hold(
+        tok.groupBy("source", "term").agg(F.count("*").alias("c_st")).persist(),
+        sf_dir,
     )
     src_tot = src_cnt.groupBy("source").agg(
         F.sum("c_st").cast("bigint").alias("n_s")
@@ -1522,7 +1523,7 @@ def d25_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the trained LM table — vocab-sized, referenced by BOTH the context
     # derivation and the scoring join; persisted so neither re-explodes
     # the corpus (dedup.py x4-signature precedent)
-    cb = big.groupBy("bg").agg(F.count("*").alias("c_ab")).persist()
+    cb = frames.hold(big.groupBy("bg").agg(F.count("*").alias("c_ab")).persist(), sf_dir)
     ca = (
         cb.select(F.split_part(F.col("bg"), F.lit(" "), F.lit(1)).alias("a"), "c_ab")
         .groupBy("a")
@@ -1727,7 +1728,7 @@ def d28_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranged = tok.repartitionByRange(
         CURRICULUM_RANGES, F.col("n_tokens").asc(), F.col("doc_id").asc()
     ).withColumn("range_id", F.spark_partition_id())
-    ranged = ranged.persist()
+    ranged = frames.hold(ranged.persist(), sf_dir)
     w = Window.partitionBy("range_id").orderBy(
         F.col("n_tokens").asc(), F.col("doc_id").asc()
     )
@@ -1968,32 +1969,27 @@ def _bpe_syms_of(df: DataFrame) -> DataFrame:
     )
 
 
-#: trained-chain cache, same rationale as dedup._CACHE: d30 and d32
-#: consume the same trained word table in one grading run; on a cluster
-#: it is a persisted tokenizer artifact written once per training run.
-#: Weakly keyed on the session itself; per session, sf_dir -> tables.
-_BPE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
-
-
-def clear_cache(sf_dir: str | None = None) -> None:
-    """Drop cached trained-BPE tables (bench symmetry with
-    dedup.clear_cache — timed runs measure the real training)."""
-    for entries in list(_BPE_CACHE.values()):
-        for key in [k for k in entries if sf_dir is None or k == sf_dir]:
-            _, cur = entries.pop(key)
-            try:
-                cur.unpersist()
-            except Exception:
-                pass
+#: bench symmetry with dedup.clear_cache: timed runs measure the real
+#: training
+clear_cache = frames.clear
 
 
 def _bpe_trained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Run the BPE_TRAIN_ROUNDS merge loop once; return (merge-list df,
     final word table (word, freq, seq)) — the Spark twin of the shared
-    oracle chain `_bpe_chain_ctes` (word carried through every round)."""
-    hit = _BPE_CACHE.get(spark, {}).get(sf_dir)
-    if hit is not None:
-        return hit
+    oracle chain `_bpe_chain_ctes` (word carried through every round).
+
+    The trained chain is a frames.cached result: d30 and d32 consume the
+    same trained word table in one grading run; on a cluster it is a
+    persisted tokenizer artifact written once per training run. Every
+    round's persisted `top`/`cur` is held until frames.clear: the lazy
+    merge list reads each round's `top`."""
+    return frames.cached(
+        spark, sf_dir, "bpe", lambda: _bpe_train(spark, sf_dir)
+    )
+
+
+def _bpe_train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     d = load_table(spark, sf_dir, "documents")
     raw = d.select(F.explode(tokens(normalize_text("text"))).alias("word"))
     wc = raw.groupBy("word").agg(F.count("*").cast("bigint").alias("freq"))
@@ -2004,6 +2000,7 @@ def _bpe_trained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
             F.lit(" "), F.trim(F.regexp_replace("word", "(.)", "$1 ")), F.lit(" ")
         ).alias("seq"),
     ).persist()
+    frames.hold(cur, sf_dir)
 
     def syms_of(df: DataFrame) -> DataFrame:
         return _bpe_syms_of(df)
@@ -2027,8 +2024,9 @@ def _bpe_trained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
             )
         )
         pcnt = pairs.groupBy("pair").agg(F.sum("freq").cast("bigint").alias("cnt"))
-        top = (
-            pcnt.orderBy(F.col("cnt").desc(), F.col("pair").asc()).limit(1).persist()
+        top = frames.hold(
+            pcnt.orderBy(F.col("cnt").desc(), F.col("pair").asc()).limit(1).persist(),
+            sf_dir,
         )
         m = top.select(
             F.lit("merge").alias("kind"),
@@ -2038,7 +2036,7 @@ def _bpe_trained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
             F.lit(r).cast("bigint").alias("rank"),
         )
         merges = m if merges is None else merges.unionByName(m)
-        cur = (
+        cur = frames.hold(
             cur.crossJoin(F.broadcast(top.select(F.col("pair").alias("mp"))))
             .select(
                 "word",
@@ -2051,11 +2049,10 @@ def _bpe_trained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
                     ),
                 ).alias("seq"),
             )
-            .persist()
+            .persist(),
+            sf_dir,
         )
-    out = (merges, cur)
-    _BPE_CACHE.setdefault(spark, {})[sf_dir] = out
-    return out
+    return merges, cur
 
 
 def _d33_oracle() -> str:
@@ -2194,14 +2191,15 @@ def d34_novelty_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
         "transform(sequence(1, size(toks) - 1), "
         "i -> element_at(toks, i) || ' ' || element_at(toks, i + 1))"
     )
-    staged = (
+    staged = frames.hold(
         d.select(
             "doc_id",
             tokens(normalize_text("text")).alias("toks"),
             (F.col("doc_id") % 10 == 0).alias("is_new"),
         )
         .filter(F.size("toks") >= 2)
-        .persist()
+        .persist(),
+        sf_dir,
     )
     base = staged.filter(~F.col("is_new"))
     new = staged.filter(F.col("is_new"))
@@ -2691,7 +2689,7 @@ def d36_kneser_ney_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bg"),
         )
     )
-    cb = big.groupBy("bg").agg(F.count("*").alias("c_ab")).persist()
+    cb = frames.hold(big.groupBy("bg").agg(F.count("*").alias("c_ab")).persist(), sf_dir)
     first = F.split_part(F.col("bg"), F.lit(" "), F.lit(1))
     second = F.split_part(F.col("bg"), F.lit(" "), F.lit(2))
     a_tab = (
@@ -3526,9 +3524,12 @@ def d44_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("predicted"),
         )
     )
-    cm = pred.groupBy("actual", "predicted").agg(
-        F.count("*").cast("bigint").alias("n")
-    ).persist()
+    cm = frames.hold(
+        pred.groupBy("actual", "predicted")
+        .agg(F.count("*").cast("bigint").alias("n"))
+        .persist(),
+        sf_dir,
+    )
     cells = cm.select(
         F.lit("cell").alias("row_type"),
         "actual",
@@ -4063,8 +4064,7 @@ def d46_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(lang_rows)
         .unionByName(shard_rows)
     ).localCheckpoint(eager=True)
-    for frame in (meta, qual, dedup, clean, picked):
-        frame.unpersist()
+    frames.release(meta, qual, dedup, clean, picked)
     return out
 
 

@@ -79,18 +79,14 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # parquet scan sizing: 128 MiB splits keep task count sane at 100 TB
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # Long-lived sessions accumulate shuffle files, broadcast
-        # blocks and checkpoint RDDs whose cleanup rides ContextCleaner
-        # weak references — which only enqueue on a JVM GC, and a
-        # driver heap sized for headroom may not full-GC for hours
-        # (the default periodic GC is 30min). A 5-minute forced GC
-        # bounds that metadata (measured: the 87-query bench session
-        # re-timed its fixed headline set ~8% faster after a System.gc
-        # reclaimed 11 dead checkpoint RDDs).
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "5min"),
-        )
+        # Materialized frames are released by their owners
+        # (file_db_spark/frames.py), but shuffle files and broadcast
+        # blocks of dead plans still free through ContextCleaner weak
+        # references, which only enqueue on a JVM GC — and a driver
+        # heap sized for headroom may not full-GC for hours (the
+        # default periodic GC is 30min). A 5-minute forced GC bounds
+        # that state in a long-lived session.
+        .config("spark.cleaner.periodicGC.interval", "5min")
         # quieter local runs
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import frames
+
 __all__ = ["dir_stat_contributions", "apply_cdc_batch"]
 
 
@@ -75,7 +77,7 @@ def apply_cdc_batch(store, source: str, consumer: str, target: str) -> dict:
         n_delta = delta.count()
         contribs = dir_stat_contributions(delta).localCheckpoint(eager=True)
     finally:
-        delta.unpersist()
+        frames.release(delta)
     metrics = {"inserted": 0, "updated": 0, "deleted": 0}
     if n_delta:
         metrics = store.merge(
@@ -94,5 +96,6 @@ def apply_cdc_batch(store, source: str, consumer: str, target: str) -> dict:
             },
             when_matched_delete="t.n_files + s.dn = 0",
         )
+    frames.release(contribs)
     store.advance_cursor(source, consumer)
     return {**metrics, "delta_rows": n_delta}

@@ -83,7 +83,9 @@ def test_star_contraction_diameter_proof(spark):
     e = spark.range(n - 1).select(F.col("id").alias("a"), (F.col("id") + 1).alias("b"))
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     stats = {}
-    labels = dedup._star_contraction_components(sym, "path-proof", stats=stats)
+    labels = dedup._star_contraction_components(
+        sym, "path-proof", lambda f: f, stats=stats
+    )
     got = labels.agg(
         F.count("*").alias("n"),
         F.sum(F.when(F.col("lab") == 0, 1).otherwise(0)).alias("zeros"),
@@ -341,7 +343,7 @@ def test_x30_collapse_expansion_identity(spark, sf_dir):
         ),
         "doc_id",
     ).select("doc_id", "text")
-    for p in dedup._x4_pairs_from(rep_docs).collect():
+    for p in dedup._x4_pairs_from(rep_docs, lambda f: f).collect():
         assert (
             by_doc[p["doc_a"]]["component_id"] == by_doc[p["doc_b"]]["component_id"]
         )

@@ -228,6 +228,24 @@ _CASES = {
         lambda st: st.refresh_mview("mv"),
         _read("mv"),
     ),
+    "rebucket": (
+        {"file": schemas.FILE}, True,
+        lambda st: st.replace("file", _file_rows(st.spark, range(64), "1.0")),
+        lambda st: st.rebucket("file", 16),
+        lambda st: (
+            _read("file")(st), st._gen_buckets("file", st._current("file"))
+        ),
+    ),
+    "rename_column": (
+        {"t": _T}, False, _replace_t,
+        lambda st: st.rename_column("t", "name", "label"),
+        lambda st: (st.read("t").columns, _read("t")(st)),
+    ),
+    "drop_column": (
+        {"t": _T}, False, _replace_t,
+        lambda st: st.drop_column("t", "name"),
+        _read("t"),
+    ),
     "compact": (
         {"t": _T}, False, _compact_setup,
         lambda st: st.compact("t", max_segments=1, zone_cols=["id"]),
@@ -267,6 +285,60 @@ def test_crash_at_every_publish_reads_old_or_new(spark, tmp_path, case):
         got = state(fresh)
         assert got in (old, new), (case, k, publishes[k - 1][1], got)
         assert fresh.recover_multi() == {}, (case, k)
+        if case == "commit_multi":
+            assert os.listdir(root / "_txn_multi") == [], (case, k)
+
+
+def test_refresh_mview_crash_after_merge_applies_the_delta_once(spark, tmp_path):
+    """A refresh that dies after its MERGE commit — at the spec publish
+    or at the cursor publish — must not re-apply that delta: the next
+    refresh, from a fresh store, matches a recompute, also when the
+    source moved on in between."""
+
+    def store(root):
+        return TableStore(spark, str(root), {"src": _MV_SRC}, bucketing=False)
+
+    base = tmp_path / "base"
+    _mv_setup(store(base))
+    clean = tmp_path / "clean"
+    shutil.copytree(base, clean)
+    st = store(clean)
+    publishes = record_publishes(st)
+    st.refresh_mview("mv")
+    after_merge = [
+        dst for _, dst in publishes[
+            max(i for i, (_, dst) in enumerate(publishes) if "_CATALOG" in dst) + 1:
+        ]
+    ]
+    assert any("_mv-mv.json" in d for d in after_merge), publishes
+    assert any("_CURSOR-__mv_mv" in d for d in after_merge), publishes
+
+    for target in ("_mv-mv.json", "_CURSOR-__mv_mv"):
+        root = tmp_path / target.strip("_-.")
+        shutil.copytree(base, root)
+        st = store(root)
+        # the last publish to `target` is the one after the MERGE commit
+        crash_at(st, sum(target in d for _, d in publishes), dst_contains=target)
+        with pytest.raises(InjectedCrash):
+            st.refresh_mview("mv")
+        fresh = store(root)
+        fresh.replace(
+            "src",
+            spark.createDataFrame(
+                [(i, f"g{i % 3}", i * 3) for i in range(5, 20)], _MV_SRC
+            ),
+        )
+        fresh.refresh_mview("mv")
+        want = sorted(
+            map(
+                tuple,
+                fresh.read("src")
+                .groupBy("grp")
+                .agg(F.count("*").alias("n"), F.sum("val").alias("total"))
+                .collect(),
+            )
+        )
+        assert _read("mv")(fresh) == want, target
 
 
 # -- durability -----------------------------------------------------------------

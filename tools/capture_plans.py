@@ -22,6 +22,7 @@ def main() -> None:
     outdir = os.path.join(REPO, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
 
+    from file_db_spark import frames
     from file_db_spark import operators as ops
     from file_db_spark.session import get_spark
 
@@ -68,8 +69,7 @@ def main() -> None:
             continue
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         try:
-            ops.dedup.clear_cache(sf_dir)
-            ops.textops.clear_cache(sf_dir)
+            frames.clear(sf_dir)
             df = fn(spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"

@@ -2,7 +2,10 @@
 """Local stand-in for the driver's correctness gate: run every
 queries() entry at sf0.01, run the matching oracle_sql() in DuckDB on
 the same parquet, and compare row-count + (order-insensitive,
-name-sorted-columns) value hash.
+name-sorted-columns) value hash. --strict also reports every RDD an
+entry left persisted after its result is released and the session's
+derived caches are cleared (`LEAK <name>: <n> RDDs`, counted as a
+failure).
 
 Usage: python tools/check.py [--graded] [--vanilla] [--strict] [query ...]
 
@@ -31,6 +34,7 @@ SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
 
+from file_db_spark import frames  # noqa: E402
 from file_db_spark.catalog import TABLES  # noqa: E402
 from file_db_spark.session import get_spark  # noqa: E402
 
@@ -61,6 +65,20 @@ def value_hash(df: pd.DataFrame) -> str:
     h = hashlib.sha256()
     h.update(pd.util.hash_pandas_object(canon(df), index=False).values.tobytes())
     return h.hexdigest()[:16]
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _leaks(spark, df, before: set) -> int:
+    """RDD ids persisted while `df` was built and run that stay
+    registered once `df` is released and the derived caches cleared
+    (ids, not counts: the ContextCleaner may drop older RDDs at any
+    moment)."""
+    frames.release(df)
+    frames.clear(SF_DIR)
+    return len(_persisted(spark) - before)
 
 
 def _fresh_main(names: list[str], vanilla: bool) -> None:
@@ -126,17 +144,30 @@ def main() -> None:
         from file_db_spark import operators as _ops
 
         qs, oracles = _ops.ALL_QUERIES, _ops.ALL_ORACLES
-    n_pass = n_fail = n_rowsonly = 0
+    if STRICT:
+        # the pinned fixture tables outlive every entry: warm them
+        # before any baseline is taken
+        from file_db_spark.filedb import fixtures
+
+        for warm in (fixtures.fixture_directory, fixtures.fixture_file, fixtures.fixture_hash):
+            warm(spark, SF_DIR)
+    n_pass = n_fail = n_rowsonly = n_leak = 0
     for name, fn in sorted(qs.items()):
         if only and name not in only:
             continue
+        before = _persisted(spark)
         try:
-            sdf = fn(spark, SF_DIR).toPandas()
+            df = fn(spark, SF_DIR)
+            sdf = df.toPandas()
         except Exception:
             print(f"FAIL  {name}: spark query crashed")
             traceback.print_exc(limit=3)
             n_fail += 1
             continue
+        leaked = _leaks(spark, df, before) if STRICT else 0
+        if leaked:
+            print(f"LEAK {name}: {leaked} RDDs")
+            n_leak += 1
         sql = oracles.get(name)
         if sql is None:
             print(f"rows  {name}: {len(sdf)} rows (rows-only, no oracle)")
@@ -172,8 +203,8 @@ def main() -> None:
             continue
         print(f"PASS  {name}: {len(sdf)} rows")
         n_pass += 1
-    print(f"\n{n_pass} pass, {n_rowsonly} rows-only, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    print(f"\n{n_pass} pass, {n_rowsonly} rows-only, {n_fail} fail, {n_leak} leak")
+    sys.exit(1 if n_fail or n_leak else 0)
 
 
 if __name__ == "__main__":

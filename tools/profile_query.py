@@ -30,6 +30,7 @@ def main() -> None:
     shutil.rmtree(EVDIR, ignore_errors=True)
     os.makedirs(EVDIR)
 
+    from file_db_spark import frames
     from file_db_spark import operators as ops
     from file_db_spark.session import get_spark
 
@@ -58,8 +59,7 @@ def main() -> None:
                 fn(spark, warm_dir).count()
             except Exception:
                 pass
-        ops.dedup.clear_cache(sf_dir)
-        ops.textops.clear_cache(sf_dir)
+        frames.clear(sf_dir)
         spark.sparkContext.setJobDescription(f"PROFILE:{name}")
         w0 = time.time() * 1000
         t0 = time.perf_counter()

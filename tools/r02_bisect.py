@@ -37,13 +37,14 @@ def storage_info(spark):
 
 
 def time_set(spark, ops, names, sf_dir):
+    from file_db_spark import frames
+
     out = {}
     for name in names:
         fn = ops.ALL_QUERIES[name]
         dt = None
         for _ in range(2):
-            ops.dedup.clear_cache(sf_dir)
-            ops.textops.clear_cache(sf_dir)
+            frames.clear(sf_dir)
             t0 = time.perf_counter()
             fn(spark, sf_dir).count()
             run = time.perf_counter() - t0
@@ -53,6 +54,7 @@ def time_set(spark, ops, names, sf_dir):
 
 
 def main() -> None:
+    from file_db_spark import frames
     from file_db_spark import operators as ops
     from file_db_spark.session import get_spark
     import bench
@@ -92,8 +94,7 @@ def main() -> None:
             fn = ops.ALL_QUERIES.get(name)
             if fn is None:
                 continue
-            ops.dedup.clear_cache(sf_dir)
-            ops.textops.clear_cache(sf_dir)
+            frames.clear(sf_dir)
             fn(spark, sf_dir).count()
         report["back_storage_pre"] = storage_info(spark)
         report["back"] = time_set(spark, ops, bench.R02_SHARED, sf_dir)

@@ -156,6 +156,7 @@ def main() -> None:
     names = sys.argv[1:] or PROBE_SET
     synthesize()
 
+    from file_db_spark import frames
     from file_db_spark import operators as ops
     from file_db_spark.session import get_spark
 
@@ -168,8 +169,7 @@ def main() -> None:
         for sf_name, sf_dir, n_runs in (("sf0.1", SRC, 2), (big, DST, 1)):
             dt = None
             for _ in range(n_runs):
-                ops.dedup.clear_cache(sf_dir)
-                ops.textops.clear_cache(sf_dir)
+                frames.clear(sf_dir)
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).count()
                 run = time.perf_counter() - t0

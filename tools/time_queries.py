@@ -20,6 +20,7 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     names = sys.argv[1:]
+    from file_db_spark import frames
     from file_db_spark import operators as ops
     from file_db_spark.session import get_spark
 
@@ -39,8 +40,7 @@ def main() -> None:
             pass
         dt = None
         for _ in range(2):
-            ops.dedup.clear_cache(sf_dir)
-            ops.textops.clear_cache(sf_dir)
+            frames.clear(sf_dir)
             t0 = time.perf_counter()
             fn(spark, sf_dir).count()
             run = time.perf_counter() - t0
